@@ -905,9 +905,9 @@ object ScaleSmoke {
       // artifact families run concurrently since r17, so the
       // first-materialization laps below read ~0/warm — the freeze call
       // wall is the LONGEST branch, and the branch attribution comes
-      // from freeze's own per-branch clocks (branch_<name> stages; the
-      // branch that first touches the shared `cleaned` cache includes
-      // its build).
+      // from freeze's own per-branch clocks (branch_<name> stages;
+      // branch_clean is the shared cleaned-text build that precedes the
+      // four branches).
       val branches = graft.streaming.CurationStream.lastFreezeBranchWalls
         .toSeq.sortBy(_._1)
         .map { case (n, s) => (s"branch_$n", s, 1L) }

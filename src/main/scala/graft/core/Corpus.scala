@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.SchemaShims
 
 import graft.operators.{Dedup, FlatCatalog, Srp, TextOps, TextRanking}
 import graft.sources.TextSources
@@ -226,8 +227,14 @@ final class Corpus(
   def cacheTargets(targets: Seq[String]): Unit =
     targets.foreach(t => derived(t).count())
 
+  /** Cached stages already resolved by this instance: each is listed,
+    * fingerprinted and read back once, not on every access. */
+  private val resolved = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+
   private def cached(name: String)(build: => DataFrame): DataFrame =
-    if (cacheSet.contains(name)) cache.getOrBuild(name)(build) else build
+    if (cacheSet.contains(name))
+      resolved.getOrElseUpdate(name, cache.getOrBuild(name)(build))
+    else build
 }
 
 object Corpus {
@@ -287,9 +294,12 @@ final class CacheManager(spark: SparkSession, cacheDir: Option[String],
         new String(Files.readAllBytes(markFile)) == fp) {
         spark.read.parquet(path)
       } else {
-        build.write.mode("overwrite").parquet(path)
+        val built = build
+        built.write.mode("overwrite").parquet(path)
         Files.write(markFile, fp.getBytes)
-        spark.read.parquet(path)
+        // parquet stores every column nullable; reading back with the known
+        // schema skips the footer-inference job
+        spark.read.schema(SchemaShims.asNullable(built.schema)).parquet(path)
       }
   }
 

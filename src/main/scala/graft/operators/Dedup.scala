@@ -340,8 +340,8 @@ object Dedup {
     * typical; `maxIter` bounds the worst case and NON-convergence within it
     * throws rather than silently returning a split component. Two
     * iterative-Spark essentials: (a) every round's labels are materialized
-    * into the cache and re-wrapped as a fresh plan over the cached RDD —
-    * without the lineage cut the logical plan DOUBLES per round (labels
+    * as a leaf plan over the stored rows ([[graft.core.CacheScope.materialize]])
+    * — without the lineage cut the logical plan DOUBLES per round (labels
     * feeds both the join and the union) and the driver OOMs analyzing it
     * long before any data is big; the previous round's cache is released
     * as soon as the next round is materialized, so storage stays O(1) in
@@ -361,20 +361,16 @@ object Dedup {
       pairs.select(col(idACol).as("src"), col(idBCol).as("dst"))
         .union(pairs.select(col(idBCol).as("src"), col(idACol).as("dst")))
         .distinct())
-    // Materialize + re-wrap: the returned frame's plan is a flat scan over
-    // the cached rows (O(1) logical plan regardless of round count). The
-    // materializing action IS the convergence aggregate (round 17, guide
-    // §1.2): one exact decimal label-sum per round both fills the cache
-    // and returns the monotone fixpoint witness — previously each round
-    // paid TWO driver actions (count to materialize, then the sum).
-    def cutLineage(df: DataFrame): (DataFrame, DataFrame, java.math.BigDecimal) = {
-      val cached = graft.core.CacheScope.persist(df)
-      val s = cached.agg(sum(col("lbl").cast("decimal(38,0)")))
-        .head().getDecimal(0)
-      (cached.sparkSession.createDataFrame(cached.rdd, cached.schema),
-        cached, s)
+    // Materialize: the returned frame's plan is a leaf over the stored
+    // rows (O(1) logical plan regardless of round count), carrying the
+    // measured size, so a small label table broadcasts into the next
+    // round's join. The exact decimal label-sum is the monotone fixpoint
+    // witness.
+    def cutLineage(df: DataFrame): (DataFrame, java.math.BigDecimal) = {
+      val cut = graft.core.CacheScope.materialize(df)
+      (cut, cut.agg(sum(col("lbl").cast("decimal(38,0)"))).head().getDecimal(0))
     }
-    var (labels, labelsCache, prevSum) = cutLineage(
+    var (labels, prevSum) = cutLineage(
       edges.select(col("src").as("id")).distinct().withColumn("lbl", col("id")))
     var converged = prevSum == null // empty graph: nothing to propagate
     var iter = 0
@@ -386,7 +382,7 @@ object Dedup {
       // (3-5 rounds), so the extra node-table self-join per round costs
       // more than the rounds it saves; it only pays past diameters these
       // pair graphs don't produce.)
-      val (next, nextCache, nextSum) = cutLineage(
+      val (next, nextSum) = cutLineage(
         edges.join(labels.withColumnRenamed("id", "dst")
             .withColumnRenamed("lbl", "nlbl"), "dst")
           .select(col("src").as("id"), col("nlbl").as("lbl"))
@@ -394,9 +390,8 @@ object Dedup {
           .groupBy("id").agg(min("lbl").as("lbl")))
       converged = nextSum.compareTo(prevSum) == 0
       prevSum = nextSum
-      labelsCache.unpersist(blocking = false) // next round is materialized
+      graft.core.CacheScope.free(labels) // next round is materialized
       labels = next
-      labelsCache = nextCache
       iter += 1
     }
     if (!converged)

@@ -337,24 +337,22 @@ object TextRanking {
     tri.groupBy("w0", "w1", "w2").agg(sum("count").as("count"))
 
   def kn3ModelFromTrigrams(tri: DataFrame,
-                           tracked: Boolean = true): Kn3Model = {
-    // tracked=false gives the model tables a FROZEN lifetime: plain
-    // persist(), NOT CacheScope-registered, so a per-batch
-    // CacheScope.release() (the session-owner contract) leaves the frozen
-    // model cached across micro-batches; the owner unpersists via
-    // [[graft.streaming.CurationStream.release]].
-    def keep(df: DataFrame): DataFrame =
-      if (tracked) graft.core.CacheScope.persist(df) else df.persist()
-    val triTot = keep(
-      tri.groupBy("w0", "w1", "w2").agg(sum("count").as("ctri")))
-    val s01 = keep(triTot.groupBy("w0", "w1")
-      .agg(sum("ctri").as("s01"), count(lit(1)).as("n1r01")))
-    val cont = keep(
-      triTot.groupBy("w1", "w2").agg(count(lit(1)).as("ncont")))
-    val mid = keep(cont.groupBy("w1")
-      .agg(sum("ncont").as("nmid"), count(lit(1)).as("n1rc")))
-    val nl = keep(
-      cont.groupBy("w2").agg(count(lit(1)).as("nl")))
+                           keep: Seq[DataFrame] => Seq[DataFrame] =
+                             _.map(graft.core.CacheScope.persist)): Kn3Model = {
+    // `keep` holds the five tables, handed over in dependency order as
+    // [triTot], [s01, cont], [mid, nl] — each group reads only tables kept
+    // before it. By default each is a CacheScope-tracked lazy persist; a
+    // caller that owns the tables' lifetime (the curation freeze)
+    // materializes each group's tables side by side and frees them itself.
+    val Seq(triTot) = keep(Seq(
+      tri.groupBy("w0", "w1", "w2").agg(sum("count").as("ctri"))))
+    val Seq(s01, cont) = keep(Seq(
+      triTot.groupBy("w0", "w1")
+        .agg(sum("ctri").as("s01"), count(lit(1)).as("n1r01")),
+      triTot.groupBy("w1", "w2").agg(count(lit(1)).as("ncont"))))
+    val Seq(mid, nl) = keep(Seq(
+      cont.groupBy("w1").agg(sum("ncont").as("nmid"), count(lit(1)).as("n1rc")),
+      cont.groupBy("w2").agg(count(lit(1)).as("nl"))))
     // ENFORCED overflow guard (the scaladoc bound, made a runtime failure
     // instead of silent non-ANSI wraparound): every num/den term is bounded
     // by 37·s01·nmid·b (num: 16 + 21 from the two addends with ncont,

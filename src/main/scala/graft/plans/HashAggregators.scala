@@ -55,11 +55,20 @@ object HashAggregators {
     override def zero: Array[Long] = new Array[Long](dims)
     override def reduce(buf: Array[Long], in: (Seq[Long], Long)): Array[Long] = {
       val (hs, w) = in
+      // the Seq arrives as a List (linear apply): copy it once per row,
+      // then walk each block's 60 bits in order
+      val blocks = hs.toArray
       var d = 0
+      var blk = 0
       while (d < dims) {
-        val h = hs(d / 60)
-        if (((h >>> (d % 60)) & 1L) == 1L) buf(d) += w else buf(d) -= w
-        d += 1
+        var h = blocks(blk)
+        val end = math.min(d + 60, dims)
+        while (d < end) {
+          if ((h & 1L) == 1L) buf(d) += w else buf(d) -= w
+          h >>>= 1
+          d += 1
+        }
+        blk += 1
       }
       buf
     }

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.CacheScope
 import graft.functions.TextFunctions.{hash60, tokens}
 import graft.operators.{Dedup, Dsir, Sketches, TextAnalysis, TextRanking}
 
@@ -43,9 +44,10 @@ object CurationStream {
   @volatile private[graft] var lastFreezeBranchWalls: Map[String, Double] =
     Map.empty
 
-  /** The frozen artifacts. All DataFrames are persisted, geometry-sized
-    * (weight buckets, shingle set, hash set, n-gram-type model tables) —
-    * broadcast-joinable at any corpus size by construction EXCEPT
+  /** The frozen artifacts. [[freeze]] materializes each DataFrame once
+    * behind a leaf plan; [[load]] reads them from a saved artifact;
+    * [[release]] frees them. They are geometry-sized (weight buckets,
+    * shingle set, hash set, n-gram-type model tables) — broadcast-joinable at any corpus size by construction EXCEPT
     * `evalShingles`/`seenHashes`, which are eval-/history-sized; their
     * Blooms do the row-local pruning so the exact confirms see only
     * candidate rows. Blooms are sharded tables (shard, word, bits);
@@ -82,23 +84,63 @@ object CurationStream {
     * by key hash instead of clamping (VERDICT r11 #3) — each shard stays
     * under the per-filter budget and the FP design point holds at any
     * cardinality. Pass `bloomBits > 0` to pin BOTH filters to one fixed-
-    * size shard instead (tests / replay). */
+    * size shard instead (tests / replay).
+    *
+    * Lineage: every returned table is materialized once and read through
+    * a leaf plan, so a query over the model never carries (or re-renders)
+    * the reference corpus's plan. The tables are not CacheScope-tracked —
+    * a per-batch `CacheScope.release()` leaves the model cached — and
+    * [[release]] frees them. The freeze frees its own intermediates before
+    * it returns or throws, and a failed freeze frees the artifacts it
+    * built, so neither leaves cached tables behind. */
   def freeze(referenceDocs: DataFrame, evalDocs: DataFrame,
              targetPred: Column, temperature: Double = 2.0,
              numBuckets: Int = 4096, shingleN: Int = 8,
              bloomBits: Int = -1, bloomHashes: Int = 5,
              bitsPerKey: Int = 10, maxBloomBits: Int = 1 << 27,
              idCol: String = "doc_id", textCol: String = "text"): FrozenCuration = {
-    // the cleaned reference text feeds THREE full scans (DSIR features,
-    // the seen-hash distinct, the trigram table) — persist it once
-    // (freeze-local lifetime, MEMORY_AND_DISK so an instance-sized
-    // corpus spills instead of evicting frozen artifacts) so cleanText's
-    // regex chain runs over every reference character ONCE, not three
-    // times (round 17: frozen_freeze_staged named scalar_cuts — the
-    // eager aggregate laps inside this call — as 27.8 of 29.5 s at
-    // 100x; the repeated clean was a third of that lap)
-    val cleaned = referenceDocs.withColumn(textCol,
-      TextAnalysis.cleanText(col(textCol))).persist()
+    // LINEAGE RULE: every table the freeze builds is materialized ONCE as
+    // a leaf plan over its stored rows ([[CacheScope.materialize]]), and
+    // every later table is built on those leaves. A plain persist() keeps
+    // its whole source plan inside the consumer's plan, so each artifact
+    // nested the ones before it: the KN3 cut query carried the reference
+    // chain (cleaned text -> trigrams -> model tables -> log-probs ->
+    // cross-entropies) once per model table, and Spark re-rendered that
+    // plan text on every adaptive stage update — most of the KN3 branch's
+    // wall was driver-side plan printing, not trigram math. Two lifetimes:
+    //  - `artifact`: the returned model tables, untracked so the session
+    //    owner's per-batch CacheScope.release() leaves them cached; freed
+    //    by [[release]], or here when the freeze fails;
+    //  - `local`: the freeze's own intermediates (cleaned text, DSIR
+    //    features, trigram table, the five KN3 factor tables, the ranked
+    //    reference cross-entropies), freed before freeze returns or
+    //    throws.
+    // Nothing the freeze builds stays in the session's CacheScope.
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration.Duration
+    val pool = java.util.concurrent.Executors.newCachedThreadPool()
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    val locals = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
+    val artifacts =
+      new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
+    def local(df: DataFrame): DataFrame = {
+      val m = CacheScope.materialize(df, tracked = false)
+      locals.add(m)
+      m
+    }
+    def settle[A](f: Future[A]): Either[Throwable, A] =
+      try Right(Await.result(f, Duration.Inf))
+      catch { case t: Throwable => Left(t) }
+    // independent tables materialized side by side, every one settled
+    // (and so registered) before a failure propagates
+    def localAll(dfs: Seq[DataFrame]): Seq[DataFrame] =
+      dfs.map(df => Future(local(df))).map(settle)
+        .map(_.fold(t => throw t, identity))
+    def artifact(df: DataFrame): DataFrame = {
+      val m = CacheScope.materialize(df, tracked = false)
+      artifacts.add(m)
+      m
+    }
     // per-set geometry: measured keys -> shard count -> bits per shard.
     // Sharding BEFORE the adaptive sizing means the per-shard ideal never
     // exceeds maxBloomBits, so the clamp inside adaptiveBloomBits is
@@ -117,39 +159,16 @@ object CurationStream {
     // Bloom, seen hashes+Bloom, KN3 model+cutoff) are INDEPENDENT once
     // `cleaned` exists, but each one ends in eager driver actions (the
     // scalar cuts, the measured-cardinality Bloom geometry), so run
-    // serially they idle most of the cluster during every small tail job
-    // — SCALE.json's frozen_freeze_staged lap named exactly those eager
-    // aggregates (`scalar_cuts`) dominant. Round 17 (guide §2.6,
-    // overlapping independent jobs): each family runs on its own driver
-    // thread; Spark's FIFO scheduler back-fills executors freed by one
-    // branch's tail with the next branch's tasks, so the freeze wall is
-    // the LONGEST branch, not the sum. Every branch fully materializes
-    // its persisted artifacts (freeze has always been the train-once/
-    // ship-warm step — Bench and ScaleSmoke both price materialization
-    // inside freeze), values are byte-identical (no RNG anywhere, each
-    // branch unchanged), and concurrent first-use of `cleaned` is safe:
-    // the BlockManager serializes per-block cache computation. Exceptions
-    // (e.g. the degenerate-reference guard) propagate unchanged through
-    // Await.result.
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    // Every plain (non-CacheScope) persist a branch creates registers
-    // here, so a FAILED freeze can release its siblings' artifacts
-    // (ADVICE r17: pool.shutdown() does not cancel in-flight branches —
-    // on one branch's throw the other three ran to completion and their
-    // persisted artifacts leaked executor storage for the session).
-    val sidePersists =
-      new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
-    def keepSide(df: DataFrame): DataFrame = { sidePersists.add(df); df }
-    // per-branch wall clocks (round 18, VERDICT r17 #6): since the
-    // branches run concurrently, post-hoc first-materialization laps
-    // read ~0/warm — each branch times its own wall into the
-    // [[lastFreezeBranchWalls]] side channel instead (dev measurement
-    // only, consumed by ScaleSmoke's frozen_freeze_staged row). The
-    // branch that happens to touch `cleaned` first includes the shared
-    // cache build in its wall — attribution, not double-counting.
+    // serially they idle most of the cluster during every small tail job.
+    // Each family runs on its own driver thread; Spark's FIFO scheduler
+    // back-fills executors freed by one branch's tail with the next
+    // branch's tasks, so the freeze wall is the LONGEST branch, not the
+    // sum. Values are byte-identical to a serial run (no RNG anywhere).
+    //
+    // Per-branch wall clocks go into the [[lastFreezeBranchWalls]] side
+    // channel (dev measurement only, consumed by ScaleSmoke's
+    // frozen_freeze_staged row); `clean` is the shared cleaned-text build
+    // that precedes the four branches.
     val branchWalls =
       new java.util.concurrent.ConcurrentHashMap[String, java.lang.Double]()
     def walled[A](name: String)(f: => A): A = {
@@ -157,26 +176,27 @@ object CurationStream {
       try f finally branchWalls.put(name, (System.nanoTime() - t0) / 1e9)
     }
     try {
+      // the cleaned reference text feeds THREE full scans (DSIR features,
+      // the seen-hash distinct, the trigram table): cleanText's regex
+      // chain runs over every reference character once
+      val cleaned = walled("clean") {
+        local(referenceDocs.withColumn(textCol,
+          TextAnalysis.cleanText(col(textCol))))
+      }
       val dsirBranch = Future { walled("dsir") {
-        // ONE tokenize+explode+hash pass over the reference (round 16):
-        // the persisted per-doc feature table feeds the frozen weight
-        // table AND the score ceiling. The previous shape called
-        // Dsir.scoreAll beside hashedFeatures, re-running the identical
-        // unigram+bigram explode-aggregate a second time.
-        val feats = graft.core.CacheScope.persist(
-          Dsir.hashedFeatures(cleaned, numBuckets, idCol, textCol))
+        // ONE tokenize+explode+hash pass over the reference: the per-doc
+        // feature table feeds the frozen weight table AND the score
+        // ceiling
+        val feats = local(Dsir.hashedFeatures(cleaned, numBuckets, idCol,
+          textCol))
         val tf = feats.join(
           cleaned.filter(targetPred).select(idCol), Seq(idCol), "semi")
-        // frozen artifacts get a PLAIN persist (never CacheScope-tracked):
-        // the session owner's per-batch CacheScope.release() must not
-        // evict them; [[release]] unpersists the whole frozen set
-        val weights =
-          keepSide(Dsir.importanceWeights(tf, feats, numBuckets).persist())
-        // reference scores from the SAME persisted feature table and the
-        // SAME frozen weight table — identical hash salt, identical
-        // micro-nat rounding, so scoreMax is value-identical to what
-        // Dsir.scoreAll produced. Geometry-sized broadcast: the weight
-        // table is <= numBuckets rows by construction.
+        val weights = artifact(Dsir.importanceWeights(tf, feats, numBuckets))
+        // reference scores from the SAME feature table and the SAME frozen
+        // weight table — identical hash salt, identical micro-nat
+        // rounding, so scoreMax is value-identical to what Dsir.scoreAll
+        // produced. Geometry-sized broadcast: the weight table is <=
+        // numBuckets rows by construction.
         val scored = feats
           .join(org.apache.spark.sql.functions.broadcast(weights),
             Seq("bucket"))
@@ -193,70 +213,58 @@ object CurationStream {
         (weights, scoreMax)
       } }
       val evalBranch = Future { walled("eval") {
-        val evalSh = keepSide(Dedup.shingles(evalDocs.withColumn(textCol,
+        val evalSh = artifact(Dedup.shingles(evalDocs.withColumn(textCol,
               TextAnalysis.cleanText(col(textCol))), shingleN, idCol, textCol)
-          .select(hash60(col("shingle")).as("sh")).distinct().persist())
-        val evalN = evalSh.count()
+          .select(hash60(col("shingle")).as("sh")).distinct())
+        val evalN = CacheScope.rowCount(evalSh)
         val (evalShards, evalBits) = geometry(evalN, "freeze/eval")
-        val evalBloom = keepSide(Sketches
-          .bloomBuildSharded(evalSh, "sh", evalShards, evalBits, bloomHashes)
-          .persist())
-        evalBloom.count() // ship warm: materialized inside the freeze
+        val evalBloom = artifact(Sketches
+          .bloomBuildSharded(evalSh, "sh", evalShards, evalBits, bloomHashes))
         (evalSh, evalN, evalShards, evalBits, evalBloom)
       } }
       val seenBranch = Future { walled("seen") {
-        val seen = keepSide(cleaned.select(md5(col(textCol)).as("h"))
-          .distinct().persist())
-        val seenN = seen.count()
+        val seen = artifact(cleaned.select(md5(col(textCol)).as("h"))
+          .distinct())
+        val seenN = CacheScope.rowCount(seen)
         val (seenShards, seenBits) = geometry(seenN, "freeze/seen")
-        val seenBloom = keepSide(Sketches
-          .bloomBuildSharded(seen, "h", seenShards, seenBits, bloomHashes)
-          .persist())
-        seenBloom.count() // ship warm
+        val seenBloom = artifact(Sketches
+          .bloomBuildSharded(seen, "h", seenShards, seenBits, bloomHashes))
         (seen, seenN, seenShards, seenBits, seenBloom)
       } }
       val kn3Branch = Future { walled("kn3") {
         // the reference trigram table is consumed TWICE — the model
         // build's first aggregate (triTot) and the full-corpus scoring
-        // pass that selects the perplexity cutoff. Persist it once
-        // (freeze-local lifetime, unpersisted right after the cutoff
-        // lands): the clean+tokenize+explode over every reference
-        // character is the heaviest KN3 scan (round 16).
-        val refTri = keepSide(graft.operators.TextOps
-          .ngrams(cleaned, 3, idCol, textCol).persist())
-        val kn3 = TextRanking.kn3ModelFromTrigrams(refTri, tracked = false)
-        Seq(kn3.triTot, kn3.s01, kn3.cont, kn3.mid, kn3.nl).foreach(keepSide)
+        // pass that selects the perplexity cutoff
+        val refTri = local(graft.operators.TextOps
+          .ngrams(cleaned, 3, idCol, textCol))
+        val kn3 = TextRanking.kn3ModelFromTrigrams(refTri, keep = localAll)
         // The frozen LM artifact is the model COLLAPSED to its scoring
-        // form: one (w0,w1,w2,lp_scaled) table, materialized here ONCE.
-        // Per-batch scoring joins the arriving side against this single
-        // persisted table — the five-table model join chain runs at
-        // freeze time only, never per batch.
-        val kn3Lp = keepSide(TextRanking.kn3LogProbs(kn3).persist())
+        // form: one (w0,w1,w2,lp_scaled) table. Per-batch scoring joins
+        // the arriving side against this single table — the five-table
+        // model join chain runs at freeze time only, never per batch.
+        val kn3Lp = artifact(TextRanking.kn3LogProbs(kn3))
         // frozen cutoff: the cross-entropy of the LAST KEPT reference doc
         // at the head+middle / tail boundary (rank 2n/3 - 1 in the
         // deterministic (ce, id) total order); curateBatch keeps
         // ce <= cut, so boundary TIES are kept (boundary-inclusive).
-        // micro grid via round(), not a truncating cast. persisted: the
-        // cut needs BOTH a count (for the 2n/3 rank) and the rank-select
-        // below — without the persist the trigram scoring join ran twice.
+        // micro grid via round(), not a truncating cast. The rank table
+        // below is the reference cross-entropies' only consumer, so they
+        // are computed inside its materialization, not stored apart.
         val ce = TextRanking.kn3ScoreTrigramsMerged(refTri, kn3Lp, idCol)
           .select(round(col("cross_entropy") * 1e6, 0).cast("long")
             .as("ce_micro"), col(idCol))
-          .persist()
-        keepSide(ce)
         // RANK-based cut, not limit-based: `limit(cutRank.toInt)` capped
         // the reference at 2^31 docs. The two-phase distributed rank
         // ([[graft.core.Ids.denseRankBy]], no single-partition window,
         // 1-row collect) selects the (ce, id) pair at rank0 = cutRank - 1
         // in the same deterministic total order for ANY reference size.
-        // n and the rank-select land in ONE action (round 17, guide
-        // §1.2): n = max(rank0) + 1 over the SAME ranked table (cached
-        // inside denseRankBy), broadcast as a 1-row cross join, so the
-        // separate ce.count() job is gone; cutRank = 2n/3 == 0 (n <= 1)
-        // matches no row and falls back exactly as the old branch did.
+        // n and the rank-select land in ONE action: n = max(rank0) + 1
+        // over the SAME ranked table, broadcast as a 1-row cross join;
+        // cutRank = 2n/3 == 0 (n <= 1) matches no row and falls back to
+        // Long.MinValue.
         val ranked = graft.core.Ids
           .denseRankBy(ce, Seq(col("ce_micro").asc, col(idCol).asc),
-            "rank0")
+            "rank0", pin = local)
         val ceCut = ranked
           .crossJoin(org.apache.spark.sql.functions.broadcast(
             ranked.agg((max("rank0") + lit(1L)).as("__n"))))
@@ -264,28 +272,23 @@ object CurationStream {
             expr("(2L * __n) DIV 3L") - lit(1L)) // exact int64 division
           .select("ce_micro").collect()
           .headOption.map(_.getLong(0)).getOrElse(Long.MinValue)
-        (refTri, kn3, kn3Lp, ce, ceCut)
+        (kn3Lp, ceCut)
       } }
-      // Settle ALL branches before propagating any failure (ADVICE r17):
-      // in-flight sibling branches cannot be cancelled mid-Spark-job, so
-      // throwing on the first failed Await left the others completing
-      // and their plain-persisted artifacts (never CacheScope-tracked)
-      // leaked executor storage for the session. Every branch is awaited
-      // to completion, then a failure unpersists everything registered
-      // in `sidePersists` and rethrows the FIRST failure in branch order
-      // — the dsir branch first, so the degenerate-reference guard
-      // surfaces the same exception it always did.
-      def settle[A](f: Future[A]): Either[Throwable, A] =
-        try Right(Await.result(f, Duration.Inf))
-        catch { case t: Throwable => Left(t) }
+      // Settle ALL branches before propagating any failure: in-flight
+      // sibling branches cannot be cancelled mid-Spark-job, so throwing on
+      // the first failed Await would leave the others completing and
+      // their artifacts held for the session. Every branch is awaited to
+      // completion, then a failure frees every artifact and rethrows the
+      // FIRST failure in branch order — the dsir branch first, so the
+      // degenerate-reference guard surfaces the same exception it always
+      // did.
       val rDsir = settle(dsirBranch)
       val rEval = settle(evalBranch)
       val rSeen = settle(seenBranch)
       val rKn3 = settle(kn3Branch)
       Seq(rDsir, rEval, rSeen, rKn3).collectFirst { case Left(t) => t }
         .foreach { t =>
-          cleaned.unpersist(blocking = false)
-          sidePersists.forEach(df => df.unpersist(blocking = false))
+          artifacts.forEach(df => CacheScope.free(df))
           throw t
         }
       val (weights, scoreMax) = rDsir.toOption.get
@@ -293,13 +296,7 @@ object CurationStream {
         rEval.toOption.get
       val (seen, seenN, seenShards, seenBits, seenBloom) =
         rSeen.toOption.get
-      val (refTri, kn3, kn3Lp, ce, ceCut) = rKn3.toOption.get
-      // the cut computation above materialized kn3Lp; the factor tables
-      // have served their purpose — release them so the frozen footprint
-      // is the log-prob table alone
-      Seq(cleaned, ce, refTri, kn3.triTot, kn3.s01, kn3.cont, kn3.mid,
-          kn3.nl)
-        .foreach(_.unpersist(blocking = false))
+      val (kn3Lp, ceCut) = rKn3.toOption.get
       lastFreezeBranchWalls = {
         import scala.jdk.CollectionConverters._
         branchWalls.asScala.map { case (k, v) => (k, v.doubleValue) }.toMap
@@ -308,7 +305,12 @@ object CurationStream {
         evalBloom, seen, seenBloom, kn3Lp, ceCut, shingleN, evalBits,
         seenBits, bloomHashes, bitsPerKey, evalShards, seenShards,
         evalN, seenN)
-    } finally pool.shutdown()
+    } finally {
+      // the model tables are built: the intermediates have served their
+      // purpose, so the frozen footprint is the returned artifacts alone
+      locals.forEach(df => CacheScope.free(df))
+      pool.shutdown()
+    }
   }
 
   /** Curate ONE arriving batch under the frozen models. Stages (matching
@@ -527,7 +529,7 @@ object CurationStream {
     * two, so a full [[release]] of the old model would evict the new
     * one's weights/eval/KN3 artifacts out from under it). */
   def releaseSeenSide(m: FrozenCuration): Unit =
-    Seq(m.seenHashes, m.seenBloom).foreach(_.unpersist(blocking = false))
+    Seq(m.seenHashes, m.seenBloom).foreach(CacheScope.free)
 
   /** Persist an [[extendSeen]]-style history advance INTO a [[save]]d
     * artifact directory as a batch-sized APPEND — the day-2 counterpart
@@ -728,13 +730,14 @@ object CurationStream {
     pruneVersions(spark, dir)
   }
 
-  /** Unpersist every frozen artifact (model tables included) — the
-    * explicit end-of-stream counterpart of the plain persists in
-    * [[freeze]]. Safe at any point; unpersisted tables recompute. */
+  /** Free every frozen artifact (model tables included) — the explicit
+    * end-of-stream counterpart of the untracked tables [[freeze]]
+    * materializes (and of [[load]]'s persists). Safe at any point; freed
+    * tables recompute. */
   def release(m: FrozenCuration): Unit =
     Seq(m.weights, m.evalShingles, m.evalBloom, m.seenHashes, m.seenBloom,
       m.kn3LogProbs)
-      .foreach(_.unpersist(blocking = false))
+      .foreach(CacheScope.free)
 
   /** Stable catalog table name for a bucketed confirm table of the
     * artifact at `dir` (bucketed reads go through the catalog — a plain

@@ -11,3 +11,10 @@ object ColumnShims {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 }
+
+/** `StructType.asNullable` is `private[spark]`: the schema with every field,
+  * nested ones included, nullable — what a parquet file reads back as. */
+object SchemaShims {
+  def asNullable(s: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType = s.asNullable
+}

@@ -82,6 +82,11 @@ class CorpusSpec extends AnyFunSuite {
     // second corpus over the same cache: reads back, same rows
     val c2 = newCorpus(Some(dir), Set("unigrams"))
     assert(c2.unigrams.count() == n1)
+    // a cold stage reads back with the schema it was written with, which
+    // is what a warm read infers from the files
+    assert(c.unigrams.schema == c2.unigrams.schema)
+    // each instance resolves a stage once
+    assert(c.unigrams eq c.unigrams)
     assert(new java.io.File(dir).listFiles().map(_.getName).toSet == Set("unigrams"))
   }
 

@@ -271,12 +271,18 @@ class EdgeCasesSpec extends AnyFunSuite {
     // clear error, never NPE or ship a model that drops every batch
     val noText = Seq((1L, "12345 !!!", "en"), (2L, "???", "en"))
       .toDF("doc_id", "text", "lang")
+    graft.core.CacheScope.release()
+    val before = spark2.sparkContext.getPersistentRDDs.keySet.toSet
     val e = intercept[IllegalArgumentException] {
       graft.streaming.CurationStream.freeze(noText, noText,
         col("lang") === "en", bloomBits = 4096)
     }
     assert(e.getMessage.contains("no DSIR scores"))
-    graft.core.CacheScope.release()
+    // the failed freeze frees what its four branches built, and leaves
+    // nothing in the session's scope
+    val leaked = spark2.sparkContext.getPersistentRDDs.keySet.toSet -- before
+    assert(leaked.isEmpty, s"failed freeze left cached RDDs $leaked")
+    assert(graft.core.CacheScope.trackedCount == 0)
   }
 
   test("round-10 operators survive empty and degenerate inputs") {

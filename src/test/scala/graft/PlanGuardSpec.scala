@@ -42,6 +42,16 @@ class PlanGuardSpec extends AnyFunSuite {
     assert(!p.contains("CartesianProduct"), "cartesian product in the pipeline")
   }
 
+  test("frozen curation: the apply plan reads the frozen tables as leaves") {
+    // freeze materializes every artifact as a leaf plan. Were they plain
+    // persists, each consumer's plan would print the reference chain
+    // beneath every frozen table (651k characters here before the leaves,
+    // about 58k with them): lineage creeping back fails this bound.
+    val p = planOf("t_frozen_curation")
+    assert(p.length <= 100000,
+      s"t_frozen_curation plan is ${p.length} characters — frozen lineage is back")
+  }
+
   test("two-corpus DSIR: weight model joins broadcast, no cartesian on data") {
     val p = planOf("t_dsir_two_corpus")
     assert(!p.contains("CartesianProduct"), "cartesian product in two-corpus DSIR")

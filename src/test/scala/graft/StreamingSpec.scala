@@ -1008,6 +1008,65 @@ class StreamingSpec extends AnyFunSuite {
     CurationStream.release(frozen)
   }
 
+  test("freeze artifacts are leaf plans equal to the tracked operators' " +
+       "tables; release leaves no cached table behind") {
+    import graft.core.CacheScope
+    import graft.functions.TextFunctions.hash60
+    import graft.streaming.CurationStream
+    import graft.operators.{Dedup, Dsir, Sketches, TextAnalysis, TextOps,
+      TextRanking}
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    val docs = spark.read.parquet(s"$dir/documents.parquet")
+    val reference = docs.filter(col("doc_id") % 2 === 0)
+    val evalDocs = reference.filter(col("doc_id") % 31 === 0)
+    CacheScope.release()
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val m = CurationStream.freeze(reference, evalDocs, col("lang") === "en")
+    assert(CacheScope.trackedCount == 0, "freeze left tables in the scope")
+    val frozen = Seq("weights" -> m.weights,
+      "evalShingles" -> m.evalShingles, "evalBloom" -> m.evalBloom,
+      "seenHashes" -> m.seenHashes, "seenBloom" -> m.seenBloom,
+      "kn3LogProbs" -> m.kn3LogProbs)
+    frozen.foreach { case (name, df) =>
+      val plan = df.queryExecution.analyzed
+      assert(plan.children.isEmpty &&
+        plan.collectFirst { case r: InMemoryRelation => r }.isEmpty,
+        s"$name is not a leaf plan:\n$plan")
+    }
+    // the same tables built through the existing tracked operators
+    def clean(d: org.apache.spark.sql.DataFrame) =
+      d.withColumn("text", TextAnalysis.cleanText(col("text")))
+    val cleaned = clean(reference)
+    val feats = Dsir.hashedFeatures(cleaned, m.numBuckets)
+    val evalSh = Dedup.shingles(clean(evalDocs), m.shingleN)
+      .select(hash60(col("shingle")).as("sh")).distinct()
+    val seen = cleaned.select(md5(col("text")).as("h")).distinct()
+    val expected = Seq(
+      Dsir.importanceWeights(feats.join(cleaned.filter(col("lang") === "en")
+        .select("doc_id"), Seq("doc_id"), "semi"), feats, m.numBuckets),
+      evalSh,
+      Sketches.bloomBuildSharded(evalSh, "sh", m.evalShards, m.evalBloomBits,
+        m.bloomHashes),
+      seen,
+      Sketches.bloomBuildSharded(seen, "h", m.seenShards, m.seenBloomBits,
+        m.bloomHashes),
+      TextRanking.kn3LogProbs(
+        TextRanking.kn3ModelFromTrigrams(TextOps.ngrams(cleaned, 3))))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
+    frozen.zip(expected).foreach { case ((name, got), want) =>
+      val g = rows(got)
+      assert(g.nonEmpty, s"$name is empty — vacuous")
+      assert(g == rows(want), s"$name differs from the tracked operators")
+    }
+    assert(m.evalKeys == evalSh.count() && m.seenKeys == seen.count())
+    CacheScope.release()
+    CurationStream.release(m)
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
+    assert(leaked.isEmpty, s"freeze + release left cached RDDs $leaked")
+    assert(CacheScope.trackedCount == 0)
+  }
+
   test("stateful near-dup stream == batch MinHash-LSH pairs across batches") {
     // the arriving-data near-dup detector: row-local signatures, LSH band
     // state, pairs emitted the moment a bucket gains a similar signature —
