@@ -87,9 +87,7 @@ object BenchAB {
     val java = s"${System.getProperty("java.home")}/bin/java"
     val mem = sys.env.getOrElse("SPARK_DRIVER_MEM", "8g")
     val cmd = Seq(java) ++ addOpens ++ Seq(
-      s"-Xmx$mem", "-Dspark.ui.enabled=false",
-      "-Dspark.sql.session.timeZone=UTC",
-      "-Dfile.encoding=UTF-8", "-Dsun.jnu.encoding=UTF-8",
+      s"-Xmx$mem", "-Dfile.encoding=UTF-8", "-Dsun.jnu.encoding=UTF-8",
       "-cp", s"$classesDir:/opt/spark/jars/*",
       "graft.Bench")
     val (code, out) = run(cmd, scratch, Map(

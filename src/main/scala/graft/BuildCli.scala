@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-import graft.core.Corpus
+import graft.core.{Corpus, GraftSession}
 
 /** CLI parity with the reference's `nonconsumptive build --targets ...`
   * (commander.py:36-116). The reference's multiprocessing layer IS Spark
@@ -22,16 +20,9 @@ object BuildCli {
     val texts = opts.getOrElse("texts",
       sys.error("--texts DIR is required"))
     val targets = opts.getOrElse("targets", "unigrams").split(",").toSeq
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      // size(null) = null, matching DuckDB len() (default -1 would desync
-      // any size() over a null text from the oracles)
-      .config("spark.sql.legacy.sizeOfNull", "false")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS",
-          Runtime.getRuntime.availableProcessors().toString))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
+    val cpus = GraftSession.envCpus(Runtime.getRuntime.availableProcessors())
+    val builder = GraftSession.builder(cpus)
+    val spark = sys.env.get("SPARK_MASTER").fold(builder)(builder.master)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val corpus = Corpus.fromFolder(spark, texts,

@@ -102,10 +102,7 @@ object Calib {
     * moves much less — so an artifact row with flat calib + inflated
     * calib_io is bandwidth contention, not a code regression. */
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.GraftSession.builder(32).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     def sample3(f: => Double): Double = { f; math.min(f, f) } // warm + min of 2
     val idleCpu = sample3(cpuOnce(spark))

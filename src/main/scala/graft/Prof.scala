@@ -1,7 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.core.GraftSession
 
 /** Dev-only stage profiler for optimization rounds: times named sub-stages
   * of the expensive registry queries in isolation (noop sink, labelled
@@ -14,17 +16,7 @@ import org.apache.spark.sql.functions._
 object Prof {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.legacy.sizeOfNull", "false")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.maxPlanStringLength", (1 << 20).toString)
-      .getOrCreate()
+    val spark = GraftSession.builder(GraftSession.envCpus(32)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // same engine warmup as Bench so stage walls are comparable
     spark.read.parquet(s"$sfDir/nation.parquet").count()
@@ -181,78 +173,6 @@ object Prof {
         println(f"[prof] apply pass$pass  ${(System.nanoTime() - t1) / 1e9}%8.3f s")
         graft.core.CacheScope.release()
       }
-    }
-
-    if (wanted("cur2")) {
-      import graft.operators.{Bpe, Dedup, Dsir, TextAnalysis, TextRanking}
-      val docs32 = docs.repartition(32)
-      val cleaned = docs32.select(col("doc_id"),
-        TextAnalysis.cleanText(col("text")).as("text"), col("lang"))
-      val scored = time("dsir scoreAll plan+actions") {
-        Dsir.scoreAll(cleaned, col("lang") === "en", numBuckets = 4096)
-      }
-      val keptIds = Dsir.importanceResample(scored, temperature = 2.0)
-        .select("doc_id")
-      val selected = cleaned.join(keptIds, Seq("doc_id"), "left_semi")
-      val train = graft.core.CacheScope.persist(
-        selected.filter(col("doc_id") % 31 =!= 0))
-      val evalDocs = cleaned.filter(col("doc_id") % 31 === 0)
-      val contaminated = Dedup.decontaminate(train, evalDocs, n = 8)
-        .select("doc_id")
-      val decon = train.join(contaminated, Seq("doc_id"), "left_anti")
-      val surv = time("surv localCheckpoint (clean+dsir+decon+dedup)") {
-        Dedup.dropExactDuplicates(decon)
-          .select("doc_id", "text").localCheckpoint()
-      }
-      val keepIds = time("perplexityBuckets plan (lazy)") {
-        TextRanking.perplexityBuckets(surv, nBuckets = 3)
-          .filter(col("bucket_id") <= 1).select("doc_id")
-      }
-      val finalDocs = time("finalDocs localCheckpoint (kn3+rank)") {
-        surv.join(keepIds, Seq("doc_id"), "left_semi").localCheckpoint()
-      }
-      val merges = time("Bpe.train(surv, 6)")(Bpe.train(surv, nMerges = 6))
-      noop(Bpe.packedInputIds(finalDocs, merges, budget = 128, nBuckets = 8)
-        .orderBy("bucket", "seq_id"), "pack tail noop")
-      graft.core.CacheScope.release()
-    }
-
-    if (wanted("cur3")) {
-      // the ROUND-18 chain shape (weightTable + scoreRowLocal head)
-      import graft.operators.{Bpe, Dedup, Dsir, TextAnalysis, TextRanking}
-      val cleaned = time("cleaned persist+count") {
-        val c = graft.core.CacheScope.persist(docs.select(col("doc_id"),
-          TextAnalysis.cleanText(col("text")).as("text"), col("lang")))
-        c.count(); c
-      }
-      val w = time("weightTable one-agg (lazy)")(
-        Dsir.weightTable(cleaned, col("lang") === "en", 4096))
-      val train = time("train persist+count (rowlocal score+resample)") {
-        val scored = Dsir.scoreRowLocal(cleaned, w, 4096)
-          .filter(col("weighted_hits") > 0).drop("weighted_hits")
-        val kept = Dsir.importanceResample(scored, temperature = 2.0)
-        val t = graft.core.CacheScope.persist(
-          kept.select("doc_id", "text", "lang")
-            .filter(col("doc_id") % 31 =!= 0))
-        t.count(); t
-      }
-      val evalDocs = cleaned.filter(col("doc_id") % 31 === 0)
-      val surv = time("surv ckpt (decontam+dedup from train)") {
-        val contaminated = Dedup.decontaminate(train, evalDocs, n = 8)
-          .select("doc_id")
-        val decon = train.join(contaminated, Seq("doc_id"), "left_anti")
-        Dedup.dropExactDuplicates(decon)
-          .select("doc_id", "text").localCheckpoint()
-      }
-      val finalDocs = time("finalDocs ckpt (kn3+rank)") {
-        val keepIds = TextRanking.perplexityBuckets(surv, nBuckets = 3)
-          .filter(col("bucket_id") <= 1).select("doc_id")
-        surv.join(keepIds, Seq("doc_id"), "left_semi").localCheckpoint()
-      }
-      val merges = time("Bpe.train(surv, 6)")(Bpe.train(surv, nMerges = 6))
-      noop(Bpe.packedInputIds(finalDocs, merges, budget = 128, nBuckets = 8)
-        .orderBy("bucket", "seq_id"), "pack tail noop")
-      graft.core.CacheScope.release()
     }
 
     if (wanted("cur")) {

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.Stages
 import graft.functions.TextFunctions._
 import graft.operators._
 
@@ -1771,68 +1772,39 @@ object Queries {
   private[graft] final case class CurationStages(
       cleaned: DataFrame, keptIds: DataFrame, train: DataFrame,
       decon: DataFrame, surv: DataFrame,
-      private val finalDocsFut: scala.concurrent.Future[DataFrame]) {
-    /** The perplexity-filtered final doc set. Its KN3 model build + rank
-      * + checkpoint run on a BACKGROUND thread started once `surv` is
-      * checkpointed (round 17, guide §2.6): the pipeline/manifest rows
-      * train BPE on `surv` between constructing the stages and consuming
-      * `finalDocs`, and those two multi-job laps (measured 2.5 s and
-      * 4.3 s at sf0.1) are independent — overlapping them makes the row's
-      * wall the longer lap, not the sum. First use blocks until the
-      * checkpoint is done; values are unchanged (same frames, same
-      * deterministic chain, exceptions propagate through Await).
-      * Deliberately EAGER and UNBOUNDED (ADVICE r17 weighed): a lazy
-      * kickoff would forfeit the measured overlap (the whole point), and
-      * a timeout would turn a legitimately long checkpoint at scale into
-      * a spurious failure — a hung localCheckpoint hangs the standalone
-      * row identically, so no new failure mode is introduced. Callers
-      * that never read finalDocs leave at most one background
-      * checkpoint job racing a CacheScope.release(), which only evicts
-      * CacheScope-tracked frames — localCheckpoint blocks are
-      * GC-managed, not tracked, so the race is benign. */
-    def finalDocs: DataFrame = scala.concurrent.Await
-      .result(finalDocsFut, scala.concurrent.duration.Duration.Inf)
+      private val finalDocsStage: Stages.Stage[DataFrame]) {
+    /** The perplexity-filtered final doc set. Its KN3 model build, rank
+      * and checkpoint run as a [[Stages]] fork started once `surv` is
+      * checkpointed: the pipeline/manifest rows train BPE on `surv`
+      * between constructing the stages and reading `finalDocs`, and the
+      * two multi-job laps (measured 2.5 s and 4.3 s at sf0.1) are
+      * independent, so the row's wall is the longer lap, not the sum.
+      * First use blocks until the checkpoint is done and rethrows its
+      * failure; values are unchanged. The fork is eager (a lazy one would
+      * forfeit the overlap) and has no timeout (a long checkpoint at scale
+      * is not a failure). A caller that never reads `finalDocs` leaves at
+      * most one checkpoint job racing a CacheScope.release(), which is
+      * benign: localCheckpoint blocks are GC-managed, not tracked. */
+    def finalDocs: DataFrame = finalDocsStage.get
   }
-
-  /** Daemon pool for [[CurationStages]]' background checkpoint — shared,
-    * unbounded-but-idle-reaped, never blocks JVM exit. */
-  private lazy val stagesPool: scala.concurrent.ExecutionContext =
-    scala.concurrent.ExecutionContext.fromExecutor(
-      java.util.concurrent.Executors.newCachedThreadPool(r => {
-        val t = new Thread(r, "graft-curation-stages")
-        t.setDaemon(true)
-        t
-      }))
 
   private def curationStages(s: SparkSession, dir: String): CurationStages =
     curationStagesFrom(rd(s, dir, "documents"))
 
-  /** Materialize the funnel stage frames as CONCURRENT Spark jobs (round
-    * 18, guide §2.6 — VERDICT r17 #4): the six per-stage semi-join
-    * aggregates are independent once their id frames exist, but composed
-    * as one lazy union they (a) serialize behind the plan-construction
-    * Await on `finalDocs` (the stage-5 frame blocks until the background
-    * KN3 checkpoint lands, so the tokenize/semi-join work of stages 0-4
-    * idles the cluster during it) and (b) run as one job whose small
-    * tail stages idle most executors. Here stages 0..4 are persisted and
-    * materialized on driver threads WHILE the stage-5 builder (which
-    * owns the Await) runs on its own thread — FIFO back-fill overlaps
-    * the branch jobs with the finalDocs checkpoint. The returned frames
-    * are the SAME persisted frames, fully materialized; the caller's
-    * union then only reads cache. Values identical: each branch's plan
-    * is unchanged, only WHEN it materializes moves. Exceptions propagate
-    * through Await. */
-  private def materializeConcurrently(
-      frames: Seq[() => DataFrame]): Seq[DataFrame] = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    val futs = frames.map(f => Future {
+  /** Persist and count each funnel stage frame as concurrent [[Stages]]
+    * forks: the per-stage semi-join aggregates are independent once their
+    * id frames exist, and the stage-5 builder blocks on `finalDocs`, so
+    * stages 0-4 run while it waits instead of idling behind it. Every
+    * fork settles before a failure propagates, so no stage registers a
+    * persist after the caller's release. Returns the SAME persisted
+    * frames, fully materialized; values are those of the lazy union. */
+  private[graft] def persistedStages(
+      frames: Seq[() => DataFrame]): Seq[DataFrame] =
+    Stages.join(frames.map(f => Stages.fork {
       val df = graft.core.CacheScope.persist(f())
       df.count() // materializes every column of the cached frame
       df
-    }(stagesPool))
-    futs.map(Await.result(_, Duration.Inf))
-  }
+    }))
 
   /** The chain over an arbitrary (doc_id, text, lang) corpus — exposed
     * package-private so ScaleSmoke can run the COMPOSED pipeline (not
@@ -1876,14 +1848,14 @@ object Queries {
     val decon = train.join(contaminated, Seq("doc_id"), "left_anti")
     val surv = Dedup.dropExactDuplicates(decon)
       .select("doc_id", "text").localCheckpoint()
-    // background (see CurationStages.finalDocs): everything below depends
+    // forked (see CurationStages.finalDocs): everything below depends
     // only on the already-checkpointed `surv`
-    val finalDocsFut = scala.concurrent.Future {
+    val finalDocs = Stages.fork {
       val keepIds = TextRanking.perplexityBuckets(surv, nBuckets = 3)
         .filter(col("bucket_id") <= 1).select("doc_id")
       surv.join(keepIds, Seq("doc_id"), "left_semi").localCheckpoint()
-    }(stagesPool)
-    CurationStages(cleaned, keptIds, train, decon, surv, finalDocsFut)
+    }
+    CurationStages(cleaned, keptIds, train, decon, surv, finalDocs)
   }
 
   /** The curation chain's oracle CTE prefix (cleaned corpus `d`, DSIR
@@ -3334,11 +3306,9 @@ object Queries {
               coalesce(sum("ntok"), lit(0L)).as("n_tokens"))
             .select(lit(i.toLong).as("stage"), lit(name).as("stage_name"),
               col("n_docs"), col("n_tokens"))
-        // concurrent stage jobs (round 18, §2.6): stages 0-4 materialize
-        // while the stage-5 builder waits out the background finalDocs
-        // checkpoint — see materializeConcurrently. Same frames, same
-        // values; the union below reads the persisted results.
-        materializeConcurrently(Seq(
+        // concurrent stage jobs (see persistedStages); the union below
+        // reads the persisted results
+        persistedStages(Seq(
           () => stage(0, "corpus", tokCounts),
           () => stage(1, "dsir_resample", st.keptIds),
           () => stage(2, "train_selected", st.train),
@@ -3394,9 +3364,8 @@ object Queries {
               coalesce(sum("ntok"), lit(0L)).as("n_tokens"))
             .select(lit(i.toLong).as("stage"), lit(name).as("stage_name"),
               col("source"), col("n_docs"), col("n_tokens"))
-        // concurrent stage jobs (round 18, §2.6) — same shape as
-        // t_curation_funnel above
-        materializeConcurrently(Seq(
+        // concurrent stage jobs, as in t_curation_funnel above
+        persistedStages(Seq(
           () => stage(0, "corpus", tokCounts),
           () => stage(1, "dsir_resample", st.keptIds),
           () => stage(2, "train_selected", st.train),

@@ -1,7 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.core.GraftSession
 
 import graft.operators.{Dedup, Similarity, Sketches, Srp, TextAnalysis, TextOps}
 
@@ -78,17 +79,7 @@ object ScaleSmoke {
     // the full suite would take hours at. All entry bodies are by-name,
     // so skipped entries cost nothing.
     val only = args.drop(1).toSet
-    val spark = SparkSession.builder().master("local[32]")
-      // size(null) = null, matching DuckDB len() (default -1 would desync
-      // any size() over a null text from the oracles)
-      .config("spark.sql.legacy.sizeOfNull", "false")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      // bound AQE's per-replan explain-string rebuild (debug-only value,
-      // multi-hundred-MB allocation spikes on deep lineages otherwise)
-      .config("spark.sql.maxPlanStringLength", (1 << 20).toString)
-      .getOrCreate()
+    val spark = GraftSession.builder(32).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val base = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
     val n = base.count()

@@ -1,29 +1,18 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+
+import graft.core.GraftSession
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
-    // optional: names after the two dirs restrict the dump (dev iteration;
-    // the driver always calls with exactly two args = full run)
+    // optional: names after the two dirs restrict the dump to those
+    // queries (`Verify <sf> <out> <name>` runs one); with the two dirs
+    // alone it dumps the whole registry
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // size(null) = null, matching DuckDB len() (default -1 would desync
-      // any size() over a null text from the oracles)
-      .config("spark.sql.legacy.sizeOfNull", "false")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // bound AQE's per-replan explain-string rebuild (debug-only value,
-      // multi-hundred-MB allocation spikes on deep lineages otherwise)
-      .config("spark.sql.maxPlanStringLength", (1 << 20).toString)
-      .getOrCreate()
+    val spark = GraftSession.builder(GraftSession.envCpus(4)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // crashed queries are recorded in the OUTPUT DIR (failed.json), not

@@ -70,33 +70,32 @@ object Bpe {
     *
     * The word table is the SUFFICIENT STATISTIC and is vocabulary-sized
     * (distinct lowercased `[a-z]+` words — Heaps'-law bounded, not
-    * corpus-sized), so up to `maxLocalVocab` rows the merge rounds run
-    * DRIVER-LOCALLY on the collected table (round 18, guide §1.2 step 1:
-    * the rounds are inherently sequential argmaxes, and running each as
-    * a full Spark job over a ≤|vocab|-row cached table paid nMerges
-    * per-job fixed costs for microseconds of work — measured 2.5-2.7 s
-    * for 6 rounds over a 31-word table at sf0.1; a 1M-word vocab is
-    * ~30 MB collected, the same order as a broadcast side). Past the
-    * guard the distributed loop runs unchanged. The two paths are
-    * value-identical: same wrapped-symbol string state, same literal
-    * left-to-right non-overlapping replace (Java String.replace ≡ Spark
-    * replace ≡ DuckDB replace on these boundary-safe strings), same
-    * overlap-counted pair sums, same (n desc, a asc, b asc) tie-break —
-    * BpeSpec pins local ≡ distributed on real corpora. */
+    * corpus-sized). It is aggregated ONCE, materialized with its measured
+    * row count; up to `maxLocalVocab` rows it is collected and the merge
+    * rounds run DRIVER-LOCALLY — the rounds are inherently sequential
+    * argmaxes, and running each as a full Spark job over a ≤|vocab|-row
+    * cached table paid nMerges per-job fixed costs for microseconds of
+    * work (measured 2.5-2.7 s for 6 rounds over a 31-word table at
+    * sf0.1). The local path holds O(|vocab|) symbol strings on the driver
+    * and does O(|vocab|·nMerges) work there; the default guard of 2^20
+    * words is ~30 MB collected, the same order as a broadcast side. Past
+    * the guard the distributed loop runs over the same materialized table,
+    * one aggregate and a 1-row collect per round, so the driver holds only
+    * the merges. The two paths are value-identical: same wrapped-symbol
+    * string state, same literal left-to-right non-overlapping replace
+    * (Java String.replace ≡ Spark replace ≡ DuckDB replace on these
+    * boundary-safe strings), same overlap-counted pair sums, same
+    * (n desc, a asc, b asc) tie-break — BpeSpec pins local ≡ distributed
+    * on real corpora, through the guard and past it. */
   def train(docs: DataFrame, nMerges: Int, idCol: String = "doc_id",
             textCol: String = "text",
             maxLocalVocab: Int = 1 << 20): Seq[Merge] = {
     require(nMerges >= 1, "need nMerges >= 1")
-    val localProbe =
-      if (maxLocalVocab > 0)
-        wordTable(docs, idCol, textCol).limit(maxLocalVocab + 1).collect()
-      else Array.empty[org.apache.spark.sql.Row]
-    if (maxLocalVocab > 0 && localProbe.length <= maxLocalVocab)
-      return trainLocal(
-        localProbe.map(r => (r.getString(0), r.getLong(1))), nMerges)
-    var state = graft.core.CacheScope.persist(
-      wordTable(docs, idCol, textCol)
-        .withColumn("sym", wrapped(col("word"))))
+    var state = graft.core.CacheScope.materialize(
+      wordTable(docs, idCol, textCol).withColumn("sym", wrapped(col("word"))))
+    if (graft.core.CacheScope.rowCount(state) <= maxLocalVocab)
+      return trainLocal(state.select("word", "cnt").collect()
+        .map(r => (r.getString(0), r.getLong(1))), nMerges)
     val merges = scala.collection.mutable.ListBuffer[Merge]()
     var step = 1
     var exhausted = false

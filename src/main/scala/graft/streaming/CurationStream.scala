@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.core.CacheScope
+import graft.core.{CacheScope, Stages}
 import graft.functions.TextFunctions.{hash60, tokens}
 import graft.operators.{Dedup, Dsir, Sketches, TextAnalysis, TextRanking}
 
@@ -92,7 +92,12 @@ object CurationStream {
     * a per-batch `CacheScope.release()` leaves the model cached — and
     * [[release]] frees them. The freeze frees its own intermediates before
     * it returns or throws, and a failed freeze frees the artifacts it
-    * built, so neither leaves cached tables behind. */
+    * built, so neither leaves cached tables behind.
+    *
+    * Concurrency: the four artifact families (DSIR, eval, seen, KN3) are
+    * independent once the cleaned reference exists, and run as
+    * [[graft.core.Stages]] forks; every branch settles before a failure
+    * propagates, so a failed freeze frees everything its branches built. */
   def freeze(referenceDocs: DataFrame, evalDocs: DataFrame,
              targetPred: Column, temperature: Double = 2.0,
              numBuckets: Int = 4096, shingleN: Int = 8,
@@ -116,10 +121,6 @@ object CurationStream {
     //    reference cross-entropies), freed before freeze returns or
     //    throws.
     // Nothing the freeze builds stays in the session's CacheScope.
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newCachedThreadPool()
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
     val locals = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
     val artifacts =
       new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
@@ -128,14 +129,11 @@ object CurationStream {
       locals.add(m)
       m
     }
-    def settle[A](f: Future[A]): Either[Throwable, A] =
-      try Right(Await.result(f, Duration.Inf))
-      catch { case t: Throwable => Left(t) }
-    // independent tables materialized side by side, every one settled
-    // (and so registered) before a failure propagates
+    // independent tables materialized side by side ([[Stages]]: every one
+    // settles, and so is registered for freeing, before a failure
+    // propagates)
     def localAll(dfs: Seq[DataFrame]): Seq[DataFrame] =
-      dfs.map(df => Future(local(df))).map(settle)
-        .map(_.fold(t => throw t, identity))
+      Stages.join(dfs.map(df => Stages.fork(local(df))))
     def artifact(df: DataFrame): DataFrame = {
       val m = CacheScope.materialize(df, tracked = false)
       artifacts.add(m)
@@ -155,15 +153,11 @@ object CurationStream {
           (n + shards - 1) / shards, bitsPerKey, maxBloomBits,
           label = label))
       }
-    // The four artifact families (DSIR weights+ceiling, eval shingles+
-    // Bloom, seen hashes+Bloom, KN3 model+cutoff) are INDEPENDENT once
-    // `cleaned` exists, but each one ends in eager driver actions (the
-    // scalar cuts, the measured-cardinality Bloom geometry), so run
-    // serially they idle most of the cluster during every small tail job.
-    // Each family runs on its own driver thread; Spark's FIFO scheduler
-    // back-fills executors freed by one branch's tail with the next
-    // branch's tasks, so the freeze wall is the LONGEST branch, not the
-    // sum. Values are byte-identical to a serial run (no RNG anywhere).
+    // Each artifact family ends in eager driver actions (the scalar cuts,
+    // the measured-cardinality Bloom geometry), so run serially they idle
+    // most of the cluster during every small tail job; as forks the
+    // freeze wall is the LONGEST branch, not the sum. Values are
+    // byte-identical to a serial run (no RNG anywhere).
     //
     // Per-branch wall clocks go into the [[lastFreezeBranchWalls]] side
     // channel (dev measurement only, consumed by ScaleSmoke's
@@ -183,7 +177,7 @@ object CurationStream {
         local(referenceDocs.withColumn(textCol,
           TextAnalysis.cleanText(col(textCol))))
       }
-      val dsirBranch = Future { walled("dsir") {
+      val dsirBranch = Stages.fork { walled("dsir") {
         // ONE tokenize+explode+hash pass over the reference: the per-doc
         // feature table feeds the frozen weight table AND the score
         // ceiling
@@ -212,7 +206,7 @@ object CurationStream {
               "text) — cannot freeze a curation model from it"))
         (weights, scoreMax)
       } }
-      val evalBranch = Future { walled("eval") {
+      val evalBranch = Stages.fork { walled("eval") {
         val evalSh = artifact(Dedup.shingles(evalDocs.withColumn(textCol,
               TextAnalysis.cleanText(col(textCol))), shingleN, idCol, textCol)
           .select(hash60(col("shingle")).as("sh")).distinct())
@@ -222,7 +216,7 @@ object CurationStream {
           .bloomBuildSharded(evalSh, "sh", evalShards, evalBits, bloomHashes))
         (evalSh, evalN, evalShards, evalBits, evalBloom)
       } }
-      val seenBranch = Future { walled("seen") {
+      val seenBranch = Stages.fork { walled("seen") {
         val seen = artifact(cleaned.select(md5(col(textCol)).as("h"))
           .distinct())
         val seenN = CacheScope.rowCount(seen)
@@ -231,7 +225,7 @@ object CurationStream {
           .bloomBuildSharded(seen, "h", seenShards, seenBits, bloomHashes))
         (seen, seenN, seenShards, seenBits, seenBloom)
       } }
-      val kn3Branch = Future { walled("kn3") {
+      val kn3Branch = Stages.fork { walled("kn3") {
         // the reference trigram table is consumed TWICE — the model
         // build's first aggregate (triTot) and the full-corpus scoring
         // pass that selects the perplexity cutoff
@@ -274,29 +268,19 @@ object CurationStream {
           .headOption.map(_.getLong(0)).getOrElse(Long.MinValue)
         (kn3Lp, ceCut)
       } }
-      // Settle ALL branches before propagating any failure: in-flight
-      // sibling branches cannot be cancelled mid-Spark-job, so throwing on
-      // the first failed Await would leave the others completing and
-      // their artifacts held for the session. Every branch is awaited to
-      // completion, then a failure frees every artifact and rethrows the
-      // FIRST failure in branch order — the dsir branch first, so the
-      // degenerate-reference guard surfaces the same exception it always
-      // did.
-      val rDsir = settle(dsirBranch)
-      val rEval = settle(evalBranch)
-      val rSeen = settle(seenBranch)
-      val rKn3 = settle(kn3Branch)
-      Seq(rDsir, rEval, rSeen, rKn3).collectFirst { case Left(t) => t }
-        .foreach { t =>
-          artifacts.forEach(df => CacheScope.free(df))
-          throw t
-        }
-      val (weights, scoreMax) = rDsir.toOption.get
-      val (evalSh, evalN, evalShards, evalBits, evalBloom) =
-        rEval.toOption.get
-      val (seen, seenN, seenShards, seenBits, seenBloom) =
-        rSeen.toOption.get
-      val (kn3Lp, ceCut) = rKn3.toOption.get
+      // every branch settles before a failure frees the artifacts and
+      // rethrows the FIRST failure in branch order — the dsir branch
+      // first, so the degenerate-reference guard surfaces its own
+      // exception
+      try Stages.join(Seq(dsirBranch, evalBranch, seenBranch, kn3Branch))
+      catch { case t: Throwable =>
+        artifacts.forEach(df => CacheScope.free(df))
+        throw t
+      }
+      val (weights, scoreMax) = dsirBranch.get
+      val (evalSh, evalN, evalShards, evalBits, evalBloom) = evalBranch.get
+      val (seen, seenN, seenShards, seenBits, seenBloom) = seenBranch.get
+      val (kn3Lp, ceCut) = kn3Branch.get
       lastFreezeBranchWalls = {
         import scala.jdk.CollectionConverters._
         branchWalls.asScala.map { case (k, v) => (k, v.doubleValue) }.toMap
@@ -309,7 +293,6 @@ object CurationStream {
       // the model tables are built: the intermediates have served their
       // purpose, so the frozen footprint is the returned artifacts alone
       locals.forEach(df => CacheScope.free(df))
-      pool.shutdown()
     }
   }
 

@@ -45,6 +45,19 @@ class BpeSpec extends AnyFunSuite {
     }
   }
 
+  test("a vocabulary past the size guard falls back to the distributed rounds") {
+    // the classic corpus has 4 distinct words: a guard of 3 measures the
+    // word table, finds it too large to collect and trains distributed
+    // over the same materialized table
+    assert(Bpe.wordTable(docs).count() == 4)
+    val fallback = Bpe.train(docs, nMerges = 6, maxLocalVocab = 3)
+    assert(fallback == Bpe.train(docs, nMerges = 6))
+    assert(fallback.map(m => (m.lhs, m.rhs)) == Seq(
+      ("e", "s"), ("es", "t"), ("l", "o"), ("lo", "w"), ("e", "w"),
+      ("ew", "est")))
+    graft.core.CacheScope.release()
+  }
+
   test("encode applies merges in order, leftmost-non-overlapping") {
     val merges = Bpe.train(docs, nMerges = 6)
     val enc = Seq("newest", "lowering", "LOW")

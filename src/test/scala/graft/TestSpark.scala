@@ -2,28 +2,16 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.core.GraftSession
+
 /** One shared local session for the whole test run. */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    val s = GraftSession.builder(4)
       .appName("graft-tests")
       // config-based extension injection — the deployment route; proves the
       // SQL function surface loads without code access to the builder
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      // size(null) = null, matching DuckDB len() (default -1 would desync
-      // any size() over a null text from the oracles)
-      .config("spark.sql.legacy.sizeOfNull", "false")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // AQE re-builds the plan's explain STRING on every runtime re-plan
-      // (AdaptiveSparkPlanExec.onUpdatePlan) even with the UI off; for
-      // the deep artifact-delta lineages some suites build, an uncapped
-      // string is a multi-hundred-MB heap spike (round-14 OOM site).
-      // 1 MB keeps the debug value and bounds the allocation.
-      .config("spark.sql.maxPlanStringLength", (1 << 20).toString)
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s

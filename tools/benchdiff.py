@@ -100,7 +100,7 @@ def main():
             pb.get("query_medians"), args.min_ratio)
     section("pipeline", pa.get("pipeline_queries"),
             pb.get("pipeline_queries"), args.min_ratio)
-    print("\nRule (README 'bench drift'): a cross-session ratio is "
+    print("\nRule (README 'Verify / bench loop'): a cross-session ratio is "
           "unadjudicated until an interleaved same-host A/B confirms it — "
           f"run: sbt \"runMain graft.BenchAB <r{ra}-sha>\"")
 
