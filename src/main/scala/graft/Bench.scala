@@ -173,8 +173,8 @@ object Bench {
     // apply, so the 23.6s row read as if apply were slow. The design's
     // claim is cheap per-batch apply against warm frozen artifacts —
     // price each phase separately. Freeze timing INCLUDES materializing
-    // every frozen artifact (train once, ship warm); apply then measures
-    // only curateBatch against them.
+    // every frozen artifact, which freeze() does itself (train once, ship
+    // warm); apply then measures only curateBatch against them.
     def frozenSuite(): Seq[(String, Seq[(Double, Boolean)])] =
       if (pipelineNames.isEmpty) Nil
       else {
@@ -190,9 +190,7 @@ object Bench {
               val f = graft.streaming.CurationStream.freeze(
                 ref, ref.filter(col("doc_id") % 31 === 0),
                 col("lang") === "en")
-              Seq(f.weights, f.evalShingles, f.evalBloom, f.seenHashes,
-                  f.seenBloom, f.kn3LogProbs)
-                .foreach { df => graft.core.CacheScope.track(df); df.count() }
+              f.tables.foreach(graft.core.CacheScope.track)
               Some(f)
             } catch { case e: Throwable =>
               okF = false

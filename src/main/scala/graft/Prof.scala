@@ -30,8 +30,8 @@ object Prof {
       spark.sparkContext.setJobDescription(null)
       r
     }
-    // by-name: the builder itself can contain eager actions (localCheckpoint,
-    // BPE train collects) that MUST land inside the timed region, as in Bench
+    // by-name: the builder itself can contain eager actions (materialized
+    // stages, BPE train collects) that MUST land inside the timed region, as in Bench
     def noop(df: => DataFrame, label: String): Unit =
       time(label)(df.write.mode("overwrite").format("noop").save())
     def docs = spark.read.parquet(s"$sfDir/documents.parquet")
@@ -162,9 +162,7 @@ object Prof {
         val t0 = System.nanoTime()
         val f = graft.streaming.CurationStream.freeze(
           ref, ref.filter(col("doc_id") % 31 === 0), col("lang") === "en")
-        Seq(f.weights, f.evalShingles, f.evalBloom, f.seenHashes,
-            f.seenBloom, f.kn3LogProbs)
-          .foreach { df => graft.core.CacheScope.track(df); df.count() }
+        f.tables.foreach(graft.core.CacheScope.track)
         println(f"[prof] freeze pass$pass ${(System.nanoTime() - t0) / 1e9}%8.3f s")
         val t1 = System.nanoTime()
         graft.streaming.CurationStream.curateBatch(

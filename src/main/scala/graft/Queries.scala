@@ -1764,27 +1764,28 @@ object Queries {
     * resample -> decontaminate -> exact dedup -> KN3 perplexity cut): the
     * stage frames, so the pipeline row (packed sequences) and the funnel
     * row (per-stage attrition) compose the SAME chain. `surv` and
-    * `finalDocs` are localCheckpoint LINEAGE CUTS — a merely-cached frame
-    * still carries its full logical lineage into KN3's five model joins
-    * and the composed tree grows multiplicatively (tens of thousands of
-    * nodes; planning alone exhausts the heap at sf0.1). With the cuts
-    * every downstream plan is the same size as its standalone row's. */
+    * `finalDocs` are tracked [[graft.core.CacheScope.materialize]] leaves:
+    * a merely-cached frame still carries its full logical lineage into
+    * KN3's five model joins and the composed tree grows multiplicatively
+    * (tens of thousands of nodes; planning alone exhausts the heap at
+    * sf0.1). With the leaves every downstream plan is the same size as
+    * its standalone row's, and the caller's release frees both. */
   private[graft] final case class CurationStages(
       cleaned: DataFrame, keptIds: DataFrame, train: DataFrame,
       decon: DataFrame, surv: DataFrame,
       private val finalDocsStage: Stages.Stage[DataFrame]) {
     /** The perplexity-filtered final doc set. Its KN3 model build, rank
-      * and checkpoint run as a [[Stages]] fork started once `surv` is
-      * checkpointed: the pipeline/manifest rows train BPE on `surv`
+      * and materialization run as a [[Stages]] fork started once `surv`
+      * is materialized: the pipeline/manifest rows train BPE on `surv`
       * between constructing the stages and reading `finalDocs`, and the
       * two multi-job laps (measured 2.5 s and 4.3 s at sf0.1) are
       * independent, so the row's wall is the longer lap, not the sum.
-      * First use blocks until the checkpoint is done and rethrows its
-      * failure; values are unchanged. The fork is eager (a lazy one would
-      * forfeit the overlap) and has no timeout (a long checkpoint at scale
-      * is not a failure). A caller that never reads `finalDocs` leaves at
-      * most one checkpoint job racing a CacheScope.release(), which is
-      * benign: localCheckpoint blocks are GC-managed, not tracked. */
+      * First use blocks until the leaf is built and rethrows its failure;
+      * values are unchanged. The fork is eager (a lazy one would forfeit
+      * the overlap) and has no timeout (a long build at scale is not a
+      * failure). A caller that never reads `finalDocs` may release before
+      * the fork ends; the fork's leaf then stays tracked, and the next
+      * release frees it. */
     def finalDocs: DataFrame = finalDocsStage.get
   }
 
@@ -1846,14 +1847,15 @@ object Queries {
     val contaminated = Dedup.decontaminate(train, evalDocs, n = 8)
       .select("doc_id")
     val decon = train.join(contaminated, Seq("doc_id"), "left_anti")
-    val surv = Dedup.dropExactDuplicates(decon)
-      .select("doc_id", "text").localCheckpoint()
+    val surv = graft.core.CacheScope.materialize(
+      Dedup.dropExactDuplicates(decon).select("doc_id", "text"))
     // forked (see CurationStages.finalDocs): everything below depends
-    // only on the already-checkpointed `surv`
+    // only on the already-materialized `surv`
     val finalDocs = Stages.fork {
       val keepIds = TextRanking.perplexityBuckets(surv, nBuckets = 3)
         .filter(col("bucket_id") <= 1).select("doc_id")
-      surv.join(keepIds, Seq("doc_id"), "left_semi").localCheckpoint()
+      graft.core.CacheScope.materialize(
+        surv.join(keepIds, Seq("doc_id"), "left_semi"))
     }
     CurationStages(cleaned, keptIds, train, decon, surv, finalDocs)
   }
@@ -3423,14 +3425,11 @@ object Queries {
           ref, ref.filter(col("doc_id") % 31 === 0), col("lang") === "en")
         val out = graft.streaming.CurationStream.curateBatch(
           docs.filter(col("doc_id") % 2 === 1), frozen).orderBy("doc_id")
-        // adopt the frozen persists into the query's CacheScope: the
+        // adopt the frozen leaves into the query's CacheScope: the
         // session owner releases them right after materialization, so the
-        // models stay cached while the row computes (an early release
-        // re-derived every model table inside the plan — 377 printed
-        // exchanges) without leaking across the driver's Verify run
-        Seq(frozen.weights, frozen.evalShingles, frozen.evalBloom,
-          frozen.seenHashes, frozen.seenBloom, frozen.kn3LogProbs)
-          .foreach(graft.core.CacheScope.track)
+        // models stay cached while the row computes without leaking
+        // across a Verify run
+        frozen.tables.foreach(graft.core.CacheScope.track)
         out
       },
       Some(s"""WITH d AS MATERIALIZED (SELECT doc_id,
@@ -3567,9 +3566,7 @@ object Queries {
         val day1 = cleaned.filter(col("doc_id") % 4 === 1)
         val advanced =
           graft.streaming.CurationStream.extendSeen(frozen, day1)
-        Seq(frozen.weights, frozen.evalShingles, frozen.evalBloom,
-          frozen.seenHashes, frozen.seenBloom, frozen.kn3LogProbs,
-          advanced.seenHashes, advanced.seenBloom)
+        (frozen.tables ++ Seq(advanced.seenHashes, advanced.seenBloom))
           .foreach(graft.core.CacheScope.track)
         val day2 = cleaned.filter(col("doc_id") % 2 === 1)
         val hashed = day2.withColumn("__h", md5(col("text")))

@@ -680,10 +680,11 @@ object ScaleSmoke {
     // -> DSIR resample -> decontaminate -> exact dedup -> KN3 perplexity
     // cut -> BPE train on survivors -> packed sequences — at replication
     // factor, not just its stages. The 49k-Exchange planning blowup
-    // (without the localCheckpoint lineage cuts) was found at sf0.1;
-    // this proves the CUT plan's exchange count is corpus-independent at
-    // factor x the data and that wall time tracks the scan. The final
-    // plan's Exchange count is printed for the README scale table.
+    // (without the lineage cuts at `surv` and `finalDocs`) was found at
+    // sf0.1; this proves the CUT plan's exchange count is corpus-
+    // independent at factor x the data and that wall time tracks the
+    // scan. The final plan's Exchange count is printed for the README
+    // scale table.
     time("curation_pipeline_full")({
       val n0 = base.count()
       // TOKEN-SALTED replication, letters-only (the word tokenizer is
@@ -850,19 +851,17 @@ object ScaleSmoke {
       })
       graft.core.CacheScope.release()
     }
-    // VERDICT r15 #8: the slowest bench row (t_frozen_curation_freeze,
-    // ~2/3 of pipeline wall excluding apply) broken into its per-artifact
-    // stages ONCE in SCALE.json, so the next freeze optimization target
-    // is named with data instead of guessed. The freeze() CALL is eager
-    // about the two scalar cuts (the DSIR score ceiling and the KN3
-    // perplexity cutoff — each an aggregate over the reference corpus,
-    // which forces the shared upstream tokenize/score materialization);
-    // the six frozen frames are then timed at first materialization in
-    // dependency order. Stages are cumulative-dependency laps: a stage
-    // prices what ITS materialization adds on top of everything already
-    // cached, mirroring Bench's t_frozen_curation_freeze total exactly
-    // (same frames, same order). Opt-in by name (a default run already
-    // pays two freezes); run with `ScaleSmoke <factor> frozen_freeze`.
+    // VERDICT r15 #8: the slowest bench row (t_frozen_curation_freeze)
+    // broken into its branches ONCE in SCALE.json, so the next freeze
+    // optimization target is named with data instead of guessed. freeze()
+    // materializes every artifact itself, so its call wall is the whole
+    // freeze. Its four artifact families run concurrently, and each
+    // branch clocks its own wall ([[CurationStream.lastFreezeBranchWalls]]:
+    // branch_<name> stages; branch_clean is the shared cleaned-text build
+    // that precedes the four branches). The six tables' row counts are
+    // the ones measured at materialization, recorded as counters.
+    // Opt-in by name (a default run already pays two freezes); run with
+    // `ScaleSmoke <factor> frozen_freeze`.
     if (only.exists(o => "frozen_freeze_staged".startsWith(o))) {
       // freeze on the REPLICATED corpus half, not the fixed base half
       // (round 16): freeze cost scales with the REFERENCE corpus — a
@@ -874,42 +873,22 @@ object ScaleSmoke {
       // DSIR explode, one persisted trigram table) is designed around.
       val refHalf = docs.filter(col("doc_id") % 2 === 0)
       val t0 = System.nanoTime()
-      var prev = t0
-      def lap(): Double = {
-        val n = System.nanoTime(); val s = (n - prev) / 1e9; prev = n; s
-      }
       val f = graft.streaming.CurationStream.freeze(
         refHalf, refHalf.filter(col("doc_id") % 31 === 0),
         col("lang") === "en")
-      val callS = lap()
-      val parts = Seq(
-        "weights" -> f.weights, "eval_shingles" -> f.evalShingles,
-        "eval_bloom" -> f.evalBloom, "seen_hashes" -> f.seenHashes,
-        "seen_bloom" -> f.seenBloom, "kn3_logprobs" -> f.kn3LogProbs
-      ).map { case (n, df) =>
-        graft.core.CacheScope.track(df)
-        val rows = df.count()
-        (n, lap(), rows)
-      }
       val total = (System.nanoTime() - t0) / 1e9
-      // Per-BRANCH walls (round 18, VERDICT r17 #6): freeze()'s four
-      // artifact families run concurrently since r17, so the
-      // first-materialization laps below read ~0/warm — the freeze call
-      // wall is the LONGEST branch, and the branch attribution comes
-      // from freeze's own per-branch clocks (branch_<name> stages;
-      // branch_clean is the shared cleaned-text build that precedes the
-      // four branches).
+      val rows = Seq("weights", "eval_shingles", "eval_bloom", "seen_hashes",
+        "seen_bloom", "kn3_logprobs")
+        .zip(f.tables.map(graft.core.CacheScope.rowCount))
       val branches = graft.streaming.CurationStream.lastFreezeBranchWalls
         .toSeq.sortBy(_._1)
         .map { case (n, s) => (s"branch_$n", s, 1L) }
       println(f"[scale] frozen_freeze_staged total=$total%8.2f s  " +
-        f"freeze_call=$callS%.2f s " +
         branches.map { case (n, s, _) => f"$n=$s%.2f s" }.mkString(" ") +
-        " " +
-        parts.map { case (n, s, r) => f"$n=$s%.2f s(rows=$r)" }
-          .mkString(" "))
-      record("frozen_freeze_staged", factor, total, parts.map(_._3).sum,
-        stages = (("freeze_call", callS, 2L) +: branches) ++ parts)
+        " " + rows.map { case (n, r) => s"$n(rows=$r)" }.mkString(" "))
+      record("frozen_freeze_staged", factor, total, rows.map(_._2).sum,
+        stages = branches,
+        counters = rows.map { case (n, r) => (s"rows_$n", r.toDouble) })
       graft.streaming.CurationStream.release(f)
       graft.core.CacheScope.release()
     }

@@ -17,18 +17,30 @@ object Verify {
     new java.io.File(outDir).mkdirs()
     // crashed queries are recorded in the OUTPUT DIR (failed.json), not
     // just stderr — so a missing <name>/ parquet is distinguishable from
-    // a query that threw (the artifact carries its own honesty)
-    val failed = scala.collection.mutable.ListBuffer.empty[(String, String)]
+    // a query that threw (the artifact carries its own honesty). So is a
+    // query that leaves cached RDDs behind after its CacheScope release:
+    // each kept table must be tracked, or owned by a model it releases
+    val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    val sc = spark.sparkContext
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
       .foreach { case (name, fn) =>
+      val before = sc.getPersistentRDDs.keySet
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        failed += name -> String.valueOf(e.getMessage).take(500)
+        failed(name) = String.valueOf(e.getMessage).take(500)
       }
       finally graft.core.CacheScope.release() // operator-internal persists
+      val leaked = sc.getPersistentRDDs -- before
+      if (leaked.nonEmpty) {
+        val msg = s"left ${leaked.size} cached RDD(s) after release: " +
+          leaked.values.mkString("; ")
+        System.err.println(s"[verify] $name $msg")
+        failed(name) = failed.get(name).fold(msg)(_ + "; " + msg)
+        leaked.values.foreach(_.unpersist(blocking = false))
+      }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -21,7 +21,7 @@ import org.apache.spark.storage.StorageLevel
   * (Verify and Bench do this per query). Releasing is safe at any point —
   * an unpersisted table recomputes instead of failing.
   *
-  * Two ways to keep a table, chosen by who consumes it:
+  * The rule for keeping a table, in three parts:
   *  - [[persist]] is lazy: the caller's own action fills the cache, so it
   *    costs no job of its own. Use it for an intermediate that several
   *    branches of ONE plan read. The cached plan stays in the consumer's
@@ -30,10 +30,16 @@ import org.apache.spark.storage.StorageLevel
   *  - [[materialize]] is eager: one job now, and the result is a LEAF plan
   *    over the stored rows. Use it for a table that later plans are built
   *    on, above all a chain of tables each built from the last (a frozen
-  *    model's artifacts, an iterative round's labels) or a table that many
-  *    later queries read: with `persist` each link would carry the whole
-  *    chain beneath it, and Spark renders that plan text again on every
-  *    adaptive stage update of every consuming query.
+  *    model's artifacts, an iterative round's labels, a composed chain's
+  *    hub stages) or a table that many later queries read: with `persist`
+  *    each link would carry the whole chain beneath it, and Spark renders
+  *    that plan text again on every adaptive stage update of every
+  *    consuming query. A leaf is either tracked (the next [[release]]
+  *    frees it) or owned by a model whose own release frees it.
+  *  - `Dataset.localCheckpoint` is used only to freeze a source before a
+  *    write changes it: a leaf here keeps its lineage and would recompute
+  *    from the mutated table, a checkpoint cannot. Its blocks are freed by
+  *    GC alone, so nothing else uses it.
   */
 object CacheScope {
   private val tracked = mutable.ArrayBuffer.empty[DataFrame]
@@ -74,10 +80,10 @@ object CacheScope {
       case None => df.unpersist(blocking = false)
     }
 
-  /** Track an ALREADY-persisted frame for the next [[release]] without
-    * re-persisting it (no "already cached" warning) — adopts an
-    * independently-managed persist (e.g. a frozen-model table) into this
-    * scope's lifetime. */
+  /** Track an ALREADY-kept frame for the next [[release]] without keeping
+    * it again (no "already cached" warning) — adopts an independently
+    * managed table (e.g. a frozen-model leaf) into this scope's
+    * lifetime. */
   def track(df: DataFrame): DataFrame = synchronized {
     tracked += df
     df

@@ -1454,6 +1454,9 @@ object Similarity {
       val model = loadIvfPq(ss, dir) // attaches bucketed tables if needed
       val (cellsDelta, codesDelta) =
         ivfPqEncodeDelta(model, newVectors, idCol = idCol, vecCol = vecCol)
+      // localCheckpoint, not a persist or a materialize leaf: both deltas'
+      // anti-joins read the tables the appends below grow, and a block
+      // recomputed through lineage after an append would lose its rows
       val cd = cellsDelta.localCheckpoint(true)
       val kd = codesDelta.localCheckpoint(true)
       if (cd.count() > 0) {

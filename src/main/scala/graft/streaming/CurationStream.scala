@@ -63,7 +63,12 @@ object CurationStream {
       shingleN: Int, evalBloomBits: Int, seenBloomBits: Int,
       bloomHashes: Int, bitsPerKey: Int,
       evalShards: Int, seenShards: Int,
-      evalKeys: Long, seenKeys: Long)
+      evalKeys: Long, seenKeys: Long) {
+    /** The six frozen tables, for [[release]] and for handing the model
+      * to a caller's CacheScope. */
+    def tables: Seq[DataFrame] = Seq(weights, evalShingles, evalBloom,
+      seenHashes, seenBloom, kn3LogProbs)
+  }
 
   /** Train every artifact from a reference corpus:
     *  - DSIR weights against `targetPred` + the corpus max score (the
@@ -415,12 +420,12 @@ object CurationStream {
     *     that STREAMS the history (no exchange of the history side);
     *  3. the confirmed duplicates broadcast into an anti-join on the
     *     batch. The advanced history is `history ∪ fresh` — a plain
-    *     union of the persisted history with the checked-new rows (no
-    *     re-shuffle; the set stays distinct because `fresh` is exactly
-    *     the not-yet-present keys). The Bloom advance is a word-wise
-    *     [[Sketches.bloomMergeSharded]] of the frozen filter with the
-    *     fresh rows' own filter at the SAME geometry — sketch algebra,
-    *     no rebuild. Only the two seen-side artifacts change; every other
+    *     union of the stored history with the checked-new rows, kept as
+    *     one leaf (no re-shuffle; the set stays distinct because `fresh`
+    *     is exactly the not-yet-present keys). The Bloom advance is a
+    *     word-wise [[Sketches.bloomMergeSharded]] of the frozen filter
+    *     with the fresh rows' own filter at the SAME geometry — sketch
+    *     algebra, no rebuild. Only the two seen-side artifacts change; every other
     *     frozen model is shared with the input (do not [[release]] both
     *     models — [[releaseSeenSide]] the superseded one).
     *
@@ -441,29 +446,35 @@ object CurationStream {
     val candidates = Sketches.bloomPruneSharded(m.seenBloom, newHashes,
       "h", m.seenShards, m.seenBloomBits, m.bloomHashes)
     val dups = m.seenHashes.join(broadcast(candidates), Seq("h"), "semi")
-    // eager lineage cut (GC-managed blocks, not a persist a caller would
-    // have to find and release): the batch-sized delta feeds three
-    // consumers (count, Bloom delta, the union) — and the union below is
-    // the ONE persisted node, so [[releaseSeenSide]] on the advanced
-    // model frees the advance exactly as it freed the old
-    // union-distinct's cache
-    val fresh = newHashes.join(broadcast(dups), Seq("h"), "left_anti")
-      .localCheckpoint(true)
-    val nNew = fresh.count() // checkpointed — a metadata count
     val baseKeys = if (m.seenKeys >= 0) m.seenKeys else m.seenHashes.count()
-    val n2 = baseKeys + nNew
+    // the batch-sized delta feeds three consumers (its row count, the
+    // Bloom delta, the union), so it is kept once. It is freed here, not
+    // left to a caller's release: the advanced tables below are leaves
+    // over their own rows, so nothing reads the delta once they are built
+    val fresh = CacheScope.materialize(
+      newHashes.join(broadcast(dups), Seq("h"), "left_anti"),
+      tracked = false)
+    val n2 = baseKeys + CacheScope.rowCount(fresh)
     if (n2 * m.bitsPerKey.toLong >
         m.seenShards.toLong * m.seenBloomBits.toLong)
       System.err.println(s"[extendSeen] seen history ($n2 keys) has " +
         s"outgrown the frozen Bloom (${m.seenShards} shard(s) x " +
         s"${m.seenBloomBits} bits < ${m.bitsPerKey}/key): FP prune rate " +
         "degrades — re-freeze to re-measure geometry")
-    val seenBloom2 = Sketches.bloomMergeSharded(Seq(m.seenBloom,
-        Sketches.bloomBuildSharded(fresh, "h", m.seenShards,
-          m.seenBloomBits, m.bloomHashes)))
-      .persist()
-    m.copy(seenHashes = m.seenHashes.unionByName(fresh).persist(),
-      seenBloom = seenBloom2, seenKeys = n2)
+    // the advanced seen side: two leaves owned by the returned model, as
+    // [[freeze]]'s artifacts are; [[releaseSeenSide]] frees them
+    try {
+      val seenBloom2 = CacheScope.materialize(
+        Sketches.bloomMergeSharded(Seq(m.seenBloom,
+          Sketches.bloomBuildSharded(fresh, "h", m.seenShards,
+            m.seenBloomBits, m.bloomHashes))),
+        tracked = false)
+      val seenHashes2 =
+        try CacheScope.materialize(m.seenHashes.unionByName(fresh),
+          tracked = false)
+        catch { case t: Throwable => CacheScope.free(seenBloom2); throw t }
+      m.copy(seenHashes = seenHashes2, seenBloom = seenBloom2, seenKeys = n2)
+    } finally CacheScope.free(fresh)
   }
 
   /** Rebuild the stored seen Bloom from the stored hash table — the
@@ -496,9 +507,9 @@ object CurationStream {
             am.confirmBuckets)
         } else spark.read.parquet(s"$dir/seen_hashes")
       val next = stateVersion(spark, dir) + 1
+      // one write into a directory the plan never reads
       Sketches.bloomBuildSharded(seen, "h", am.seenShards, am.seenBloomBits,
           am.bloomHashes)
-        .localCheckpoint(true)
         .write.mode("overwrite").parquet(s"$dir/seen_bloom_v$next")
       writeMeta(spark, dir, am.copy(seenBloomV = next), next)
       graft.core.Fs.writePointer(spark, dir, next)
@@ -608,11 +619,12 @@ object CurationStream {
       attachConfirmTable(spark, dir, suffix, sub, "h STRING", "h",
         am.confirmBuckets)
       val table = confirmTable(dir, suffix)
-      // EAGER lineage cut, not a persist: the delta's anti-join reads the
-      // very table the append below mutates, so a lazily re-evaluated plan
-      // (cache eviction, a second action) after the append would see its
-      // own rows as already-stored and build an EMPTY Bloom delta — the
-      // checkpoint freezes the pre-append row set for both consumers
+      // localCheckpoint, not a persist or a materialize leaf: the delta's
+      // anti-join reads the very table the append below mutates, and both
+      // keep lineage, so a block recomputed after the append (cache
+      // eviction, a lost executor) would see its own rows as
+      // already-stored and drop them. The checkpoint freezes the
+      // pre-append row set for the count, the Bloom delta and the append
       val newHashes = accepted.select(md5(col(textCol)).as("h"))
         .filter(col("h").isNotNull).distinct()
         .join(spark.table(table), Seq("h"), "left_anti")
@@ -624,10 +636,11 @@ object CurationStream {
           if (stored.columns.contains("shard")) stored
           else stored.withColumn("shard", lit(0)) // pre-round-12 filter
         val next = stateVersion(spark, dir) + 1
+        // one write into a fresh version directory: `stored` is an older
+        // version (or the legacy `seen_bloom`), never `seen_bloom_v$next`
         Sketches.bloomMergeSharded(Seq(storedSharded,
             Sketches.bloomBuildSharded(newHashes, "h", am.seenShards,
               am.seenBloomBits, am.bloomHashes)))
-          .localCheckpoint(true)
           .write.mode("overwrite").parquet(s"$dir/seen_bloom_v$next")
         writeMeta(spark, dir, am.copy(
           seenKeys = if (am.seenKeys >= 0) am.seenKeys + nNew else -1L,
@@ -717,10 +730,7 @@ object CurationStream {
     * end-of-stream counterpart of the untracked tables [[freeze]]
     * materializes (and of [[load]]'s persists). Safe at any point; freed
     * tables recompute. */
-  def release(m: FrozenCuration): Unit =
-    Seq(m.weights, m.evalShingles, m.evalBloom, m.seenHashes, m.seenBloom,
-      m.kn3LogProbs)
-      .foreach(CacheScope.free)
+  def release(m: FrozenCuration): Unit = m.tables.foreach(CacheScope.free)
 
   /** Stable catalog table name for a bucketed confirm table of the
     * artifact at `dir` (bucketed reads go through the catalog — a plain

@@ -31,7 +31,7 @@ class PlanGuardSpec extends AnyFunSuite {
 
   test("curation pipeline: lineage cuts hold — bounded exchanges, no SMJ/cartesian") {
     // The composed clean->DSIR->decontam->dedup->KN3->BPE->pack chain cuts
-    // lineage at the survivor and final-doc hubs (localCheckpoint); without
+    // lineage at the survivor and final-doc hubs (materialized leaves); without
     // those cuts the tree grows multiplicatively (measured: 49k Exchange
     // nodes, 1.2k SortMergeJoins, OOM at planning). Guard the cut: the
     // final packing stage's plan must stay leaf-rooted and small.

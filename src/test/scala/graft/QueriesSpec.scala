@@ -4,7 +4,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Every registered driver query must run at sf0.001 (the oracle VALUE match
   * is covered by Verify + tools/check.py; this catches runtime regressions
-  * fast inside `sbt test`). */
+  * fast inside `sbt test`) and leave no cached RDD behind once its
+  * CacheScope is released, as Verify checks per row. */
 class QueriesSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val dir = "/root/testdata/sf0.001"
@@ -14,8 +15,16 @@ class QueriesSpec extends AnyFunSuite {
 
   Queries.all.foreach { case (name, q) =>
     test(s"$name runs at sf0.001") {
-      val n = q.fn(spark, dir).count()
+      val sc = spark.sparkContext
+      val before = sc.getPersistentRDDs.keySet
+      val n =
+        try q.fn(spark, dir).count()
+        finally graft.core.CacheScope.release()
       if (!mayBeEmpty(name)) assert(n > 0, s"$name returned no rows")
+      val leaked = sc.getPersistentRDDs -- before
+      leaked.values.foreach(_.unpersist(blocking = false))
+      assert(leaked.isEmpty,
+        s"$name left cached RDDs after release: ${leaked.values.mkString("; ")}")
     }
   }
 

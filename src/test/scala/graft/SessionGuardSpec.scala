@@ -27,6 +27,30 @@ class SessionGuardSpec extends AnyFunSuite {
       s"sessions built outside GraftSession: ${builders.filterNot(allowed)}")
   }
 
+  test("localCheckpoint only freezes a source before a write changes it") {
+    // graft.core.CacheScope states the rule: every other eager keep is a
+    // materialized leaf, which a release or its model frees. Checkpoint
+    // blocks are freed by GC alone.
+    val needle = ".localCheckpoint" + "("
+    val allowed = Map(
+      "CurationStream.scala" -> Seq("saveSeenDelta"),
+      "Similarity.scala" -> Seq("addToSavedIvfPq", "addToSavedIvfPq"))
+    val walk = Files.walk(Paths.get("src/main"))
+    val sources =
+      try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    // each call site, named by the nearest enclosing `def` above it
+    val sites = sources.flatMap { p =>
+      var owner = ""
+      Files.readAllLines(p).asScala.flatMap { line =>
+        "\\bdef (\\w+)".r.findFirstMatchIn(line).foreach(m => owner = m.group(1))
+        if (line.contains(needle)) Some(p.getFileName.toString -> owner)
+        else None
+      }
+    }.groupMap(_._1)(_._2)
+    assert(sites == allowed, s"localCheckpoint call sites: $sites")
+  }
+
   test("the test session carries the oracle settings from the factory") {
     val conf = TestSpark.spark.conf
     assert(conf.get("spark.sql.legacy.sizeOfNull") == "false")

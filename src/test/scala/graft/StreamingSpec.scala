@@ -705,6 +705,9 @@ class StreamingSpec extends AnyFunSuite {
     // writing the second file only after the first is fully processed
     // (the late-file pickup the source already proves).
     import graft.streaming.CurationStream
+    // every table the loop keeps is tracked or owned by a model: once the
+    // stream stops and both models are released, none may remain cached
+    val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet
     val docs = spark.read
       .parquet("/root/testdata/sf0.001/documents.parquet")
     val ref = docs.filter(col("doc_id") % 2 === 0)
@@ -777,6 +780,9 @@ class StreamingSpec extends AnyFunSuite {
     CurationStream.release(model)
     CurationStream.release(frozen)
     graft.core.CacheScope.release()
+    val leaked = spark.sparkContext.getPersistentRDDs -- rddsBefore
+    assert(leaked.isEmpty,
+      s"the day loop left cached RDDs: ${leaked.values.mkString("; ")}")
   }
 
   test("streaming ANN growth: addToSavedIvfPq per micro-batch == one " +
