@@ -13,7 +13,7 @@ import org.apache.spark.sql.SparkSession
   *    read 0.126-0.444s while byte-identical suites swung 21.7-24.9s —
   *    the slow mode was I/O / memory-bandwidth shaped, which a
   *    register-arithmetic burst never touches.
-  *  - [[ioOnce]] — a fixed scan + hash-aggregate over a pinned ~200 MB
+  *  - [[ioSettled]] — a fixed scan + hash-aggregate over a pinned ~200 MB
   *    parquet fixture of xxhash64 noise (incompressible on purpose: a
   *    compressible fixture would measure the codec, not the memory
   *    system). The work is bandwidth-bound end to end — parquet decode,
@@ -26,9 +26,10 @@ import org.apache.spark.sql.SparkSession
   * + inflated calib_io = the round-15 drift mode; both flat + a query
   * moved = a real code regression worth an interleaved A/B ([[BenchAB]]).
   *
-  * The fixture is generated once per JVM into a temp dir (~2s); its size
-  * is fixed (14M rows x 2 incompressible longs ≈ 220 MB) regardless of
-  * scale factor, so probe values compare across rounds and notches.
+  * Each [[ioSettled]] call writes the fixture into a temp dir (~2 s) and
+  * deletes it afterwards; its size is fixed (14M rows x 2 incompressible
+  * longs ≈ 220 MB) regardless of scale factor, so probe values compare
+  * across rounds and notches.
   *
   * Run `runMain graft.Calib` for the contention-bracket demo: it samples
   * both probes idle, then under a deliberate in-process memory-bandwidth
@@ -45,30 +46,9 @@ object Calib {
     (System.nanoTime() - t0) / 1e9
   }
 
-  @volatile private var fixtureDir: Option[String] = None
-
-  /** The pinned bandwidth fixture, generated once per JVM. xxhash64
-    * output is uniform noise, so parquet stores it ~raw: 14M rows x 16
-    * payload bytes ≈ 220 MB on disk and in flight. 8 files so the scan
-    * parallelizes without a repartition shuffle. */
-  def ioFixture(spark: SparkSession): String = synchronized {
-    fixtureDir.getOrElse {
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft_calib_io").toString
-      spark.range(14000000L)
-        .selectExpr("id", "xxhash64(id) AS h1", "xxhash64(id, id+1) AS h2")
-        .repartition(8)
-        .write.mode("overwrite").parquet(dir)
-      fixtureDir = Some(dir)
-      dir
-    }
-  }
-
-  /** One bandwidth-bound sample: scan the fixture, hash-aggregate to 1024
-    * groups, collect. First call pays the one-time fixture write; callers
-    * wanting a clean sample should discard the first ([[ioSettled]]). */
-  def ioOnce(spark: SparkSession): Double = {
-    val dir = ioFixture(spark)
+  /** One bandwidth-bound sample: scan the fixture at `dir`, hash-aggregate
+    * to 1024 groups, collect. */
+  private def ioOnce(spark: SparkSession, dir: String): Double = {
     val t0 = System.nanoTime()
     // pmod bounds the summand: a raw sum of 14M full-range xxhash64
     // longs overflows under ANSI mode (Spark 4 default) — found by the
@@ -83,14 +63,26 @@ object Calib {
     (System.nanoTime() - t0) / 1e9
   }
 
-  /** Warm the fixture (generation + one discarded scan), then return the
-    * min of `n` samples — the recorded `calib_io_sec`. Min, not median:
+  /** The recorded `calib_io_sec`: write the pinned bandwidth fixture into
+    * a new temp directory, take one discarded scan (cache warm), return
+    * the min of `n` samples, and delete the fixture, also on failure.
+    * xxhash64 output is uniform noise, so parquet stores it ~raw: 14M rows
+    * x 16 payload bytes ≈ 220 MB on disk and in flight, in 8 files so the
+    * scan parallelizes without a repartition shuffle. Min, not median:
     * like the per-query stat, the probe's floor is the host's available
     * bandwidth; transient co-tenant spikes belong to `contended`
     * adjudication, not the fingerprint. */
   def ioSettled(spark: SparkSession, n: Int = 2): Double = {
-    ioOnce(spark) // fixture write + cache warm, discarded
-    (1 to n).map(_ => ioOnce(spark)).min
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft_calib_io").toString
+    try {
+      spark.range(14000000L)
+        .selectExpr("id", "xxhash64(id) AS h1", "xxhash64(id, id+1) AS h2")
+        .repartition(8)
+        .write.mode("overwrite").parquet(dir)
+      ioOnce(spark, dir)
+      (1 to n).map(_ => ioOnce(spark, dir)).min
+    } finally graft.core.Fs.delete(spark, dir)
   }
 
   /** Contention-bracket demo (VERDICT r15 #2 "Done" clause): prove the

@@ -3299,7 +3299,11 @@ object Queries {
     "t_curation_funnel" -> Q(
       (s, dir) => {
         val st = curationStages(s, dir)
-        val tokCounts = graft.core.CacheScope.persist(
+        // six concurrently planned stage forks read the token counts:
+        // kept eagerly before any fork plans, every fork plans against
+        // the same measured leaf (over a lazy persist, a fork's join
+        // strategy depends on whether a sibling has filled it yet)
+        val tokCounts = graft.core.CacheScope.materialize(
           st.cleaned.select(col("doc_id"),
             size(tokens(col("text"))).cast("long").as("ntok")))
         def stage(i: Int, name: String, ids: DataFrame): DataFrame =
@@ -3354,7 +3358,8 @@ object Queries {
     "t_curation_funnel_by_source" -> Q(
       (s, dir) => {
         val st = curationStages(s, dir)
-        val tokCounts = graft.core.CacheScope.persist(
+        // kept eagerly, as in t_curation_funnel above
+        val tokCounts = graft.core.CacheScope.materialize(
           st.cleaned.select(col("doc_id"),
               size(tokens(col("text"))).cast("long").as("ntok"))
             .join(rd(s, dir, "documents").select("doc_id", "source"),

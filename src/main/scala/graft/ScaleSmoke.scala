@@ -814,7 +814,7 @@ object ScaleSmoke {
       graft.streaming.CurationStream.save(frozen, fdir)
       graft.streaming.CurationStream.release(frozen)
       spark.sql("DROP TABLE IF EXISTS " +
-        graft.streaming.CurationStream.confirmTable(fdir, "eval"))
+        graft.streaming.CurationStream.store(fdir).table("eval_shingles"))
       spark.sql("DROP TABLE IF EXISTS " +
         graft.streaming.CurationStream.seenTableName(spark, fdir))
       time("frozen_curation_load_apply")({

@@ -177,11 +177,9 @@ object Fs {
   //    orphan `_v<N>` files no reader ever resolves (prune reclaims);
   //  - two publishers racing on the same N: exactly one create wins, the
   //    loser fails loudly (publishes run under [[withLock]] anyway, so
-  //    this is a belt under the suspenders);
-  //  - version monotonicity does the legacy migration: a rename-era
-  //    `CURRENT` file is read as one more candidate and max() wins, so
-  //    round-13/14 artifacts open unchanged and their first new publish
-  //    moves them onto markers.
+  //    this is a belt under the suspenders).
+  // Markers are the only pointer read: a directory still holding the
+  // rename-era `CURRENT` file is refused by [[VersionedStore.version]].
   // Old markers are pruned with the same retention window as the state
   // files they point at ([[prunePointers]]).
 
@@ -198,34 +196,9 @@ object Fs {
   }
 
   /** Read the artifact's current state version: the max over create-only
-    * `CURRENT.v<N>` markers and (legacy, rename-era) the `CURRENT` file's
-    * value. None for a pre-round-13 artifact (unversioned `meta`/
-    * `seen_bloom` paths) or an empty/missing dir.
-    *
-    * A PRESENT-but-unparseable legacy `CURRENT` fails LOUDLY (ADVICE r15):
-    * silently Try(...).toOption-ing it made a corrupted rename-era
-    * artifact read as "no artifact" (versioned artifacts keep state only
-    * under `*_v<N>` paths), which let the `force = false` overwrite
-    * guards in save()/saveIvfPq pass and publish a fresh `CURRENT.v0`
-    * OVER live state — readers snap from v<N> to the new v0 and the old
-    * generations orphan. Corruption must stop the writer, not unlock it. */
-  def readPointer(spark: SparkSession, dir: String): Option[Long] = {
-    val legacy = readSmall(spark, s"$dir/CURRENT").map { s =>
-      scala.util.Try(s.trim.toLong).getOrElse(throw new IllegalStateException(
-        s"readPointer: $dir/CURRENT exists but is unparseable " +
-          s"[${s.trim.take(80)}]. Refusing to treat the artifact as " +
-          "absent — a silent parse-skip would let save()'s overwrite " +
-          "guard publish v0 over live state. Repair the file to hold the " +
-          "current version number, or delete it ONLY if a CURRENT.v<N> " +
-          "marker at/above its last known value exists."))
-    }
-    (listPointerVersions(spark, dir) ++ legacy).maxOption
-  }
-
-  /** Is there any published version under `dir`? (The protocol-correct
-    * replacement for `exists($dir/CURRENT)` checks.) */
-  def pointerExists(spark: SparkSession, dir: String): Boolean =
-    readPointer(spark, dir).nonEmpty
+    * `CURRENT.v<N>` markers. None for an empty or missing dir. */
+  def readPointer(spark: SparkSession, dir: String): Option[Long] =
+    listPointerVersions(spark, dir).maxOption
 
   /** Publish state version `v` by exclusively creating the marker
     * `$dir/CURRENT.v<v>`. Callers must have fully written every `_v<v>`
@@ -280,11 +253,8 @@ object Fs {
   private val LockDebris = """.*\.(claim|stale)-.*""".r
 
   /** Prune pointer markers behind the caller's retention window: delete
-    * `CURRENT.v<k>` for k < `keepBelow`, and the legacy rename-era
-    * `CURRENT` file once a marker at or above its value exists AND its
-    * value is behind the window (readers then resolve markers alone).
-    * Runs under the caller's writer lock, like the state-file prune it
-    * accompanies.
+    * `CURRENT.v<k>` for k < `keepBelow`, never the newest. Runs under the
+    * caller's writer lock, like the state-file prune it accompanies.
     *
     * Also sweeps orphaned lock-election debris (ADVICE r15): a claim
     * marker left by a takeover winner that crashed before its
@@ -313,12 +283,6 @@ object Fs {
     markers.filter(k => k < keepBelow && k < top).foreach { k =>
       f.delete(new org.apache.hadoop.fs.Path(s"$dir/CURRENT.v$k"), false)
     }
-    readSmall(spark, s"$dir/CURRENT")
-      .flatMap(s => scala.util.Try(s.trim.toLong).toOption)
-      .foreach { legacyV =>
-        if (legacyV <= top && legacyV < keepBelow)
-          f.delete(new org.apache.hadoop.fs.Path(s"$dir/CURRENT"), false)
-      }
   }
 
   // -------------------------------------------------- capability probe

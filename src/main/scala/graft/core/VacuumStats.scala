@@ -4,11 +4,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** What a vacuum reclaimed — returned as DATA (VERDICT r13 #9) so artifact
   * hygiene is monitorable from a manifest/metrics pipeline instead of from
-  * stderr lines lost in executor logs. `pathsDropped` counts version
-  * directories (and legacy unversioned paths) deleted; `filesReclaimed` /
-  * `bytesReclaimed` are the recursive file count / byte size those paths
-  * held at deletion time (from FileSystem.getContentSummary, taken before
-  * the delete).
+  * stderr lines lost in executor logs. `pathsDropped` counts generation
+  * directories deleted; `filesReclaimed` / `bytesReclaimed` are the
+  * recursive file count / byte size those paths held at deletion time
+  * (from FileSystem.getContentSummary, taken before the delete).
   */
 final case class VacuumStats(
     pathsDropped: Long, filesReclaimed: Long, bytesReclaimed: Long) {

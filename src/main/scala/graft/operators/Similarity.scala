@@ -912,6 +912,76 @@ object Similarity {
                            pq: Pq.Model)
   }
 
+  /** The saved index at `dir` ([[graft.core.VersionedStore]]): `cells` and
+    * `codes` are its versioned families, both at the meta's `table_v`,
+    * with the fixed two-generation retention window. `centroids` and
+    * `codebooks` are written once by [[saveIvfPq]]. */
+  private[graft] def ivfPqStore(dir: String): graft.core.VersionedStore =
+    graft.core.VersionedStore("ivfpq", dir,
+      Seq("cells" -> "table_v", "codes" -> "table_v"))
+
+  /** The index's scalar state, the one row of `meta_v<N>`: the bucket
+    * count, the live `cells_v<K>`/`codes_v<K>` generation, bucket-appends
+    * since the last full write, and the file count at that write. */
+  private[graft] final case class IvfPqMeta(
+      buckets: Int, tableV: Long, deltas: Long, files: Long)
+
+  private[graft] def readIvfPqMeta(
+      spark: org.apache.spark.sql.SparkSession, dir: String): IvfPqMeta = {
+    val r = ivfPqStore(dir).current(spark).head()
+    IvfPqMeta(r.getAs[Int]("buckets"), r.getAs[Long]("table_v"),
+      r.getAs[Long]("deltas"), r.getAs[Long]("files"))
+  }
+
+  /** Write meta at version `v` (published by the caller — the live meta
+    * is never overwritten in place). */
+  private def writeIvfPqMeta(spark: org.apache.spark.sql.SparkSession,
+      dir: String, m: IvfPqMeta, v: Long): Unit = {
+    import spark.implicits._
+    ivfPqStore(dir).writeMeta(Seq((m.buckets, m.tableV, m.deltas, m.files))
+      .toDF("buckets", "table_v", "deltas", "files"), v)
+  }
+
+  /** Index-hygiene MANIFEST (VERDICT r14 #8): one queryable row of the
+    * saved index's retention/fragmentation state from the same meta +
+    * listing every search resolves, so "does this index need a
+    * compaction/vacuum" is a DataFrame predicate, not a log grep.
+    * `deltas` counts bucket-appends since the last full write
+    * ([[loadIvfPq]] warns past
+    * [[graft.core.VersionedStore.FragmentationWarnDeltas]]); `files` is
+    * the cells + codes file count at that write. */
+  def ivfPqManifest(spark: org.apache.spark.sql.SparkSession,
+                    dir: String): org.apache.spark.sql.DataFrame = {
+    import spark.implicits._
+    val m = readIvfPqMeta(spark, dir)
+    val (cur, metaVs, markers) = ivfPqStore(dir).census(spark)
+    Seq((cur, m.buckets, m.tableV, m.deltas, m.files, metaVs, markers))
+      .toDF("state_version", "buckets", "table_version", "deltas",
+        "files_at_last_write", "versions_on_disk", "pointer_markers")
+  }
+
+  /** Drop every index state generation except the CURRENT one
+    * ([[graft.core.VersionedStore.vacuum]]); returns what was reclaimed
+    * (VERDICT r13 #9), so index hygiene is monitorable as data — append
+    * `.toDF` to a run manifest. */
+  def vacuumIvfPq(spark: org.apache.spark.sql.SparkSession, dir: String,
+                  leaseMs: Long = graft.core.Fs.NoLease)
+      : graft.core.VacuumStats =
+    ivfPqStore(dir).vacuum(spark, leaseMs)
+
+  /** Publish version `v` of a fully written `cells_v<v>`/`codes_v<v>`
+    * pair under a fresh meta (`deltas` = 0) — the end of both
+    * [[saveIvfPq]] and the compaction. Returns the pair's file count. */
+  private def publishFullWrite(spark: org.apache.spark.sql.SparkSession,
+      dir: String, buckets: Int, v: Long): Long = {
+    val s = ivfPqStore(dir)
+    val files = s.files(spark, s"cells_v$v") + s.files(spark, s"codes_v$v")
+    writeIvfPqMeta(spark, dir, IvfPqMeta(buckets, tableV = v, deltas = 0L,
+      files = files), v)
+    s.publish(spark, v)
+    files
+  }
+
   /** Persist a fitted IVF-PQ index to `dir` as four parquet tables —
     * cell assignments, PQ codes (the two corpus-sized halves), coarse
     * centroids and PQ codebooks (the two geometry-sized driver halves,
@@ -919,298 +989,85 @@ object Similarity {
     * every JVM is not an index: fit once where the corpus lives, ship
     * the directory, [[loadIvfPq]] + search anywhere. Doubles round-trip
     * parquet bit-exactly, so a loaded index searches value-identically
-    * (spec-proven). */
-  /** Stable catalog name for a bucketed index table of the artifact at
-    * `dir` (bucketed reads go through the catalog). */
-  private[graft] def ivfPqTable(dir: String, suffix: String): String = {
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    s"graft_ivfpq_${digest.take(12)}_$suffix"
-  }
-
-  /** Persist an index. The two CORPUS-SIZED tables (`cells`, `codes`)
-    * are written BUCKETED + sorted on `id` (the curation confirm-table
-    * pattern): every [[ivfPqSearch]] starts with the inverted-file read
-    * `codes JOIN cells ON id` — with both sides co-bucketed that join
-    * plans with NO Exchange on either corpus-sized side for a LOADED
-    * index, and [[ivfPqEncodeDelta]]'s already-indexed anti-join stops
-    * re-shuffling the stored cells per add. Geometry tables
-    * (centroids/codebooks) and a one-row meta (bucket count) ship as
-    * plain parquet. `buckets` AUTO-SIZES from the materialized code-row
-    * count by default (VERDICT r11 #2: a fixed bucket count silently
-    * becomes the search/add parallelism ceiling as the index grows —
-    * same constant, same fate as the curation confirm tables): max(
-    * cluster parallelism, 32, codeRows / 2^20), logged — ~2^20 code rows
-    * per bucket keeps one bucket a few MB, and a 10^10-vector index at
-    * m=4 auto-sizes to ~38k buckets. Pass an explicit count to pin. */
-  /** The index's scalar state, one row at the pointer-resolved meta path
-    * (three generations: pre-r11 = no meta; r11/r12 = one `buckets`
-    * column at `$dir/meta`; r13 = versioned `meta_v<N>` + `CURRENT`
-    * pointer, adding the live table version and fragmentation stats —
-    * the curation artifact's scheme, VERDICT r12 #1/#2). */
-  private[graft] final case class IvfPqMeta(
-      buckets: Int, tableV: Long = -1L, deltas: Long = -1L,
-      files: Long = -1L)
-
-  private def ivfPqMetaPath(dir: String, v: Long): String =
-    if (v >= 0) s"$dir/meta_v$v" else s"$dir/meta"
-
-  /** (cells subdir, codes subdir) of the live index tables. */
-  private def ivfPqTableDirs(m: IvfPqMeta): (String, String) =
-    if (m.tableV >= 0) (s"cells_v${m.tableV}", s"codes_v${m.tableV}")
-    else ("cells", "codes")
-
-  private[graft] def readIvfPqMeta(
-      spark: org.apache.spark.sql.SparkSession, dir: String): IvfPqMeta = {
-    val v = graft.core.Fs.readPointer(spark, dir).getOrElse(-1L)
-    val df = spark.read.parquet(ivfPqMetaPath(dir, v))
-    val cols = df.columns.toSet
-    val r = df.head()
-    def l(name: String): Long = if (cols(name)) r.getAs[Long](name) else -1L
-    IvfPqMeta(r.getAs[Int]("buckets"), l("table_v"), l("deltas"),
-      l("files"))
-  }
-
-  /** Write meta at version `v` (published by the caller's pointer flip —
-    * the live meta is never overwritten in place). */
-  private def writeIvfPqMeta(spark: org.apache.spark.sql.SparkSession,
-      dir: String, m: IvfPqMeta, v: Long): Unit = {
-    import spark.implicits._
-    Seq((m.buckets, m.tableV, m.deltas, m.files))
-      .toDF("buckets", "table_v", "deltas", "files")
-      .coalesce(1).write.mode("overwrite").parquet(ivfPqMetaPath(dir, v))
-  }
-
-  /** Index-hygiene MANIFEST — [[graft.streaming.CurationStream.manifest]]'s
-    * IVF-PQ twin (VERDICT r14 #8): one queryable row of the saved index's
-    * retention/fragmentation state from the same meta + listing every
-    * search resolves, so "does this index need a compaction/vacuum" is a
-    * DataFrame predicate, not a log grep. `deltas` counts bucket-appends
-    * since the last full write ([[loadIvfPq]] warns past 32); `files` is
-    * the code-table file count at that write. */
-  def ivfPqManifest(spark: org.apache.spark.sql.SparkSession,
-                    dir: String): org.apache.spark.sql.DataFrame = {
-    import spark.implicits._
-    val m = readIvfPqMeta(spark, dir)
-    val cur = graft.core.Fs.readPointer(spark, dir).getOrElse(-1L)
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val names = p.getFileSystem(spark.sessionState.newHadoopConf())
-      .listStatus(p).map(_.getPath.getName)
-    Seq((cur, m.buckets, m.tableV, m.deltas, m.files,
-        names.count(_.matches("meta_v\\d+")).toLong,
-        names.count(_.matches("CURRENT\\.v\\d+")).toLong))
-      .toDF("state_version", "buckets", "table_version", "deltas",
-        "files_at_last_write", "versions_on_disk", "pointer_markers")
-  }
-
-  private def parquetFileCount(spark: org.apache.spark.sql.SparkSession,
-                               path: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sessionState.newHadoopConf())
-      .listStatus(p).count(st => st.getPath.getName.endsWith(".parquet"))
-      .toLong
-  }
-
-  /** Delete index state versions older than TWO generations back (the
-    * reader grace window — the curation artifact's retention rule: one
-    * `addToSavedIvfPq` call can bump the version twice via its
-    * auto-compaction, so keep-two guarantees no single write call
-    * outruns a concurrent reader), plus the legacy unversioned paths
-    * once no kept meta references them. */
-  private def pruneIvfPqVersions(spark: org.apache.spark.sql.SparkSession,
-                                 dir: String): Unit = {
-    val cur = graft.core.Fs.readPointer(spark, dir).getOrElse(-1L)
-    if (cur < 0) return
-    def tableVAt(v: Long): Long = {
-      val df = spark.read.parquet(ivfPqMetaPath(dir, v))
-      if (df.columns.contains("table_v")) df.head().getAs[Long]("table_v")
-      else -1L
-    }
-    val keep = Seq(cur, cur - 1, cur - 2)
-      .filter(v => v >= 0 &&
-        graft.core.Fs.exists(spark, ivfPqMetaPath(dir, v)))
-      .map(tableVAt).toSet
-    val hp = new org.apache.hadoop.fs.Path(dir)
-    val f = hp.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!f.exists(hp)) return
-    val Versioned = """(meta|cells|codes)_v(\d+)""".r
-    f.listStatus(hp).foreach { st =>
-      st.getPath.getName match {
-        case Versioned("meta", v) if v.toLong < cur - 2 =>
-          f.delete(st.getPath, true)
-        case Versioned(t @ ("cells" | "codes"), v)
-            if v.toLong < cur && !keep(v.toLong) =>
-          f.delete(st.getPath, true)
-          spark.sql(
-            s"DROP TABLE IF EXISTS ${ivfPqTable(dir, s"${t}_v$v")}")
-        case _ => ()
-      }
-    }
-    if (cur >= 2) {
-      graft.core.Fs.delete(spark, s"$dir/meta")
-      if (!keep(-1L)) for (t <- Seq("cells", "codes")) {
-        graft.core.Fs.delete(spark, s"$dir/$t")
-        spark.sql(s"DROP TABLE IF EXISTS ${ivfPqTable(dir, t)}")
-      }
-    }
-    // pointer markers ride the same retention window (VERDICT r14 #1)
-    graft.core.Fs.prunePointers(spark, dir, cur - 2)
-  }
-
-  /** Drop every index state generation except the CURRENT one — the
-    * explicit storage-reclaim op ([[graft.streaming.CurationStream.vacuum]]'s
-    * twin) for operators who know no reader is mid-scan; the automatic
-    * prune always keeps the previous generation as a grace window, which
-    * for corpus-sized cells/codes means up to 2x storage between state
-    * changes. Runs under the delta lock.
+    * (spec-proven).
     *
-    * Returns what was reclaimed (VERDICT r13 #9) so index hygiene is
-    * monitorable as data — append `.toDF` to a run manifest. */
-  def vacuumIvfPq(spark: org.apache.spark.sql.SparkSession, dir: String,
-                  leaseMs: Long = graft.core.Fs.NoLease)
-      : graft.core.VacuumStats =
-    graft.core.Fs.withLock(spark, s"$dir/_delta_lock",
-      "re-run the vacuum (it only deletes non-current state)",
-      leaseMs = leaseMs) {
-      var stats = graft.core.VacuumStats.Zero
-      val cur = graft.core.Fs.readPointer(spark, dir).getOrElse(-1L)
-      if (cur >= 0) {
-        val m = readIvfPqMeta(spark, dir)
-        val hp = new org.apache.hadoop.fs.Path(dir)
-        val f = hp.getFileSystem(spark.sessionState.newHadoopConf())
-        val Versioned = """(meta|cells|codes)_v(\d+)""".r
-        f.listStatus(hp).foreach { st =>
-          st.getPath.getName match {
-            case Versioned("meta", v) if v.toLong != cur =>
-              stats += graft.core.VacuumStats.delete(f, st.getPath)
-            case Versioned(t @ ("cells" | "codes"), v)
-                if v.toLong != m.tableV =>
-              stats += graft.core.VacuumStats.delete(f, st.getPath)
-              spark.sql(
-                s"DROP TABLE IF EXISTS ${ivfPqTable(dir, s"${t}_v$v")}")
-            case _ => ()
-          }
-        }
-        val legacyMeta = new org.apache.hadoop.fs.Path(s"$dir/meta")
-        if (f.exists(legacyMeta))
-          stats += graft.core.VacuumStats.delete(f, legacyMeta)
-        if (m.tableV >= 0) for (t <- Seq("cells", "codes")) {
-          val lp = new org.apache.hadoop.fs.Path(s"$dir/$t")
-          if (f.exists(lp))
-            stats += graft.core.VacuumStats.delete(f, lp)
-          spark.sql(s"DROP TABLE IF EXISTS ${ivfPqTable(dir, t)}")
-        }
-        graft.core.Fs.prunePointers(spark, dir, cur)
-      }
-      stats
-    }
-
-  /** FRESH-DIR CONTRACT, enforced (VERDICT r13 #3): like
+    * The two CORPUS-SIZED tables (`cells`, `codes`) are written
+    * BUCKETED + sorted on `id` (the curation confirm-table pattern):
+    * every [[ivfPqSearch]] starts with the inverted-file read `codes JOIN
+    * cells ON id` — with both sides co-bucketed that join plans with NO
+    * Exchange on either corpus-sized side for a LOADED index, and
+    * [[ivfPqEncodeDelta]]'s already-indexed anti-join stops re-shuffling
+    * the stored cells per add. `buckets` AUTO-SIZES from the code-row
+    * count by default ([[graft.core.VersionedStore.autoBuckets]], ~2^20
+    * code rows per bucket: a 10^10-vector index at m=4 auto-sizes to
+    * ~38k buckets). Pass an explicit count to pin.
+    *
+    * FRESH-DIR CONTRACT, enforced (VERDICT r13 #3): like
     * [[graft.streaming.CurationStream.save]], saveIvfPq REFUSES a
     * directory that already holds a published index — the cells/codes
-    * tables are versioned + pointer-flipped, but `centroids` and
-    * `codebooks` are rewritten IN PLACE, so a re-save over a live index
-    * tears the very geometry every search resolves first. Save the
-    * refit to a fresh directory (growth goes through
-    * [[addToSavedIvfPq]]); `force = true` only when provably no reader
-    * exists. */
+    * tables are versioned, but `centroids` and `codebooks` are rewritten
+    * IN PLACE, so a re-save over a live index tears the very geometry
+    * every search resolves first. Save the refit to a fresh directory
+    * (growth goes through [[addToSavedIvfPq]]); `force = true` only when
+    * provably no reader exists. */
   def saveIvfPq(model: IvfPq.Model, dir: String, buckets: Int = -1,
                 force: Boolean = false): Unit = {
     val spark = model.cells.sparkSession
     import spark.implicits._
-    graft.core.Fs.requireAtomicStore(spark, dir, "saveIvfPq")
-    if (!force && (graft.core.Fs.pointerExists(spark, dir) ||
-        graft.core.Fs.exists(spark, s"$dir/meta")))
-      throw new IllegalStateException(s"saveIvfPq: $dir already holds a " +
-        "published index. centroids/codebooks are rewritten in place — " +
-        "re-saving over a LIVE index tears the geometry under concurrent " +
-        "searches, and a crash mid-save leaves no complete version. Save " +
-        "the refit to a fresh directory (growth goes through " +
-        "addToSavedIvfPq), or pass force = true if provably no reader " +
-        "exists.")
+    val s = ivfPqStore(dir)
+    val next = s.requireFresh(spark, "saveIvfPq",
+      "centroids/codebooks (the geometry every search resolves first)",
+      force)
     val nb =
       if (buckets > 0) buckets
-      else {
-        val codeRows = model.pq.codes.count()
-        val b = math.max(
-          math.max(32, spark.sparkContext.defaultParallelism).toLong,
-          (codeRows + (1L << 20) - 1) / (1L << 20)).toInt
-        System.err.println(s"[saveIvfPq] buckets=$b auto-sized " +
-          s"($codeRows code rows, target ${1L << 20} rows/bucket)")
-        b
-      }
-    val next = graft.core.Fs.readPointer(spark, dir).getOrElse(-1L) + 1
-    graft.core.Bucketing.writeBucketed(model.cells,
-      ivfPqTable(dir, s"cells_v$next"), s"$dir/cells_v$next", "id", nb)
-    graft.core.Bucketing.writeBucketed(model.pq.codes,
-      ivfPqTable(dir, s"codes_v$next"), s"$dir/codes_v$next", "id", nb)
+      else graft.core.VersionedStore.autoBuckets(spark,
+        model.pq.codes.count(), 1L << 20, "saveIvfPq")
     model.centroids.map { case (ci, v) => (ci, v.toSeq) }
       .toDF("cell", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids")
+      .coalesce(1).write.mode("overwrite").parquet(s.path("centroids"))
     model.pq.codebooks.map { case (sub, code, v) => (sub, code, v.toSeq) }
       .toDF("sub", "code", "codeword")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/codebooks")
-    writeIvfPqMeta(spark, dir, IvfPqMeta(nb, tableV = next, deltas = 0L,
-      files = parquetFileCount(spark, s"$dir/cells_v$next") +
-        parquetFileCount(spark, s"$dir/codes_v$next")), next)
-    graft.core.Fs.writePointer(spark, dir, next)
-    pruneIvfPqVersions(spark, dir)
+      .coalesce(1).write.mode("overwrite").parquet(s.path("codebooks"))
+    s.writeTable(model.cells, s"cells_v$next", "id", nb)
+    s.writeTable(model.pq.codes, s"codes_v$next", "id", nb)
+    publishFullWrite(spark, dir, nb, next)
   }
 
-  /** Catalog-attach one bucketed index table in a fresh session; the
-    * column DDL comes from the parquet footer itself, so string-id and
-    * long-id indexes both round-trip (the id-type-agnostic contract). */
+  /** Catalog-attach one bucketed index table; the column DDL comes from
+    * the parquet footer itself, so string-id and long-id indexes both
+    * round-trip (the id-type-agnostic contract). */
   private def attachIvfPqTable(spark: org.apache.spark.sql.SparkSession,
-      dir: String, suffix: String, buckets: Int): DataFrame = {
-    val table = ivfPqTable(dir, suffix)
-    if (!spark.catalog.tableExists(table)) {
-      val ddl = spark.read.parquet(s"$dir/$suffix").schema.toDDL
-      val loc = s"$dir/$suffix".replace("'", "''")
-      spark.sql(s"CREATE TABLE $table ($ddl) USING PARQUET " +
-        s"CLUSTERED BY (id) SORTED BY (id) INTO $buckets BUCKETS " +
-        s"LOCATION '$loc'")
-    } else
-      // another session (a foreachBatch clone, a sibling job) may have
-      // appended deltas since THIS session cached the relation — a load
-      // must never serve a stale file listing (see addToSavedIvfPq)
-      spark.catalog.refreshTable(table)
-    spark.table(table)
+      dir: String, sub: String, buckets: Int): DataFrame = {
+    val s = ivfPqStore(dir)
+    s.attach(spark, sub, "id", buckets,
+      spark.read.parquet(s.path(sub)).schema.toDDL)
   }
 
   /** Load a [[saveIvfPq]]-persisted index. The driver-side halves are
     * collected back (bounded by nlist x dim and m x k x dsub — index
     * geometry, never corpus size); the corpus-sized tables come back as
     * BUCKETED catalog scans (attached via DDL in a fresh session), kept
-    * lazy until a search touches them. Pre-round-11 artifacts (no meta
-    * file) load as plain parquet. */
+    * lazy until a search touches them. */
   def loadIvfPq(spark: org.apache.spark.sql.SparkSession,
                 dir: String): IvfPq.Model = {
-    val centroids = spark.read.parquet(s"$dir/centroids")
+    val m = readIvfPqMeta(spark, dir)
+    val s = ivfPqStore(dir)
+    val centroids = spark.read.parquet(s.path("centroids"))
       .collect()
       .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
       .sortBy(_._1).toSeq
-    val codebooks = spark.read.parquet(s"$dir/codebooks")
+    val codebooks = spark.read.parquet(s.path("codebooks"))
       .collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
       .sortBy(t => (t._1, t._2)).toSeq
-    // existence via the Hadoop FileSystem API: java.io.File is
-    // always-false on hdfs:///s3a:// paths, which silently demoted every
-    // remote artifact to the pre-round-11 plain-parquet branch (ADVICE r11)
-    val (cells, codes) =
-      if (graft.core.Fs.pointerExists(spark, dir) ||
-          graft.core.Fs.exists(spark, s"$dir/meta")) {
-        val m = readIvfPqMeta(spark, dir)
-        if (m.deltas > 32L)
-          System.err.println(s"[loadIvfPq] index at $dir has ${m.deltas} " +
-            "bucket-appended deltas since its last full write: listing/" +
-            "footer reads degrade — run compactIvfPq(spark, dir)")
-        val (cd, kd) = ivfPqTableDirs(m)
-        (attachIvfPqTable(spark, dir, cd, m.buckets),
-          attachIvfPqTable(spark, dir, kd, m.buckets))
-      } else
-        (spark.read.parquet(s"$dir/cells"),
-          spark.read.parquet(s"$dir/codes"))
-    IvfPq.Model(cells, centroids, Pq.Model(codes, codebooks))
+    if (m.deltas > graft.core.VersionedStore.FragmentationWarnDeltas)
+      System.err.println(s"[loadIvfPq] index at $dir has ${m.deltas} " +
+        "bucket-appended deltas since its last full write: listing/" +
+        "footer reads degrade — run compactIvfPq(spark, dir)")
+    IvfPq.Model(attachIvfPqTable(spark, dir, s"cells_v${m.tableV}", m.buckets),
+      centroids, Pq.Model(
+        attachIvfPqTable(spark, dir, s"codes_v${m.tableV}", m.buckets),
+        codebooks))
   }
 
   /** Top-`k` cells ranked by exact integer squared-L2 to the frozen
@@ -1448,9 +1305,9 @@ object Similarity {
     // listing and silently re-append or miss rows (found by the
     // streaming ANN-growth spec: codes froze at the fit size).
     val ss = newVectors.sparkSession
-    graft.core.Fs.withLock(ss, s"$dir/_delta_lock",
-      "re-run the interrupted add (the encode-append is idempotent)",
-      leaseMs = leaseMs) {
+    val s = ivfPqStore(dir)
+    s.locked(ss, "re-run the interrupted add (the encode-append is " +
+        "idempotent)", leaseMs) {
       val model = loadIvfPq(ss, dir) // attaches bucketed tables if needed
       val (cellsDelta, codesDelta) =
         ivfPqEncodeDelta(model, newVectors, idCol = idCol, vecCol = vecCol)
@@ -1460,100 +1317,74 @@ object Similarity {
       val cd = cellsDelta.localCheckpoint(true)
       val kd = codesDelta.localCheckpoint(true)
       if (cd.count() > 0) {
-        if (graft.core.Fs.pointerExists(ss, dir) ||
-            graft.core.Fs.exists(ss, s"$dir/meta")) {
-          val m = readIvfPqMeta(ss, dir)
-          val (cdir, kdir) = ivfPqTableDirs(m)
-          // bucket-encoded append: the grown table keeps its co-located
-          // join property (each delta adds per-bucket files, no rewrite).
-          // CRASH ORDERING between the two appends: codes FIRST, each
-          // id's codes anti-joined against the stored codes table. A
-          // crash between the appends leaves orphan codes rows — ids the
-          // search's `codes JOIN cells` inner join simply drops (absent,
-          // never wrong) — and the re-run repairs them: the encode
-          // anti-join (vs cells) re-derives those ids, the codes anti
-          // skips their already-stored rows, and the cells append
-          // completes the pair. Cells-first would instead leave ids the
-          // encode anti-join skips FOREVER with no codes — silently
-          // unsearchable.
-          //
-          // The anti-join is at (id, sub) granularity, NOT id (ADVICE
-          // r13): a task-level commit or speculative task can tear a
-          // crashed append WITHIN one id, persisting some but not all of
-          // its m subspace rows. An id-only anti-join would then skip the
-          // whole id forever, and the cells append would make it
-          // searchable with INCOMPLETE codes — silently wrong ADC
-          // distances. Per-(id, sub), the re-run appends exactly the
-          // missing subspace rows and the id completes.
-          val kdFresh = kd.join(
-            ss.table(ivfPqTable(dir, kdir)).select(col("id"), col("sub")),
+        val m = readIvfPqMeta(ss, dir)
+        // bucket-encoded append: the grown table keeps its co-located
+        // join property (each delta adds per-bucket files, no rewrite).
+        // CRASH ORDERING between the two appends: codes FIRST, each
+        // id's codes anti-joined against the stored codes table. A
+        // crash between the appends leaves orphan codes rows — ids the
+        // search's `codes JOIN cells` inner join simply drops (absent,
+        // never wrong) — and the re-run repairs them: the encode
+        // anti-join (vs cells) re-derives those ids, the codes anti
+        // skips their already-stored rows, and the cells append
+        // completes the pair. Cells-first would instead leave ids the
+        // encode anti-join skips FOREVER with no codes — silently
+        // unsearchable.
+        //
+        // The anti-join is at (id, sub) granularity, NOT id (ADVICE
+        // r13): a task-level commit or speculative task can tear a
+        // crashed append WITHIN one id, persisting some but not all of
+        // its m subspace rows. An id-only anti-join would then skip the
+        // whole id forever, and the cells append would make it
+        // searchable with INCOMPLETE codes — silently wrong ADC
+        // distances. Per-(id, sub), the re-run appends exactly the
+        // missing subspace rows and the id completes.
+        val codes = s.table(s"codes_v${m.tableV}")
+        kd.join(ss.table(codes).select(col("id"), col("sub")),
             Seq("id", "sub"), "left_anti")
-          kdFresh.write.mode("append").insertInto(ivfPqTable(dir, kdir))
-          cd.write.mode("append").insertInto(ivfPqTable(dir, cdir))
-          // publish the bumped fragmentation counter as a new meta
-          // version (never an in-place overwrite), then auto-compact
-          // once the append count crosses the threshold — amortized:
-          // one rewrite per compactEvery batch-sized deltas
-          val next = graft.core.Fs.readPointer(ss, dir).getOrElse(-1L) + 1
-          writeIvfPqMeta(ss, dir,
-            m.copy(deltas = math.max(0L, m.deltas) + 1L), next)
-          graft.core.Fs.writePointer(ss, dir, next)
-          pruneIvfPqVersions(ss, dir)
-          if (compactEvery > 0 &&
-              math.max(0L, m.deltas) + 1L >= compactEvery)
-            compactIvfPq0(ss, dir)
-        } else { // pre-round-11 plain-parquet artifact
-          cd.write.mode("append").parquet(s"$dir/cells")
-          kd.write.mode("append").parquet(s"$dir/codes")
-        }
+          .write.mode("append").insertInto(codes)
+        cd.write.mode("append").insertInto(s.table(s"cells_v${m.tableV}"))
+        // publish the bumped fragmentation counter as a new meta
+        // version (never an in-place overwrite), then auto-compact
+        // once the append count crosses the threshold — amortized:
+        // one rewrite per compactEvery batch-sized deltas
+        val next = s.version(ss) + 1
+        writeIvfPqMeta(ss, dir, m.copy(deltas = m.deltas + 1L), next)
+        s.publish(ss, next)
+        if (compactEvery > 0 && m.deltas + 1L >= compactEvery)
+          compactIvfPq0(ss, dir)
       }
       loadIvfPq(ss, dir)
     }
   }
 
   /** Rewrite the index's bucketed cells/codes tables into FRESH versioned
-    * directories and publish them behind the pointer — the IVF-PQ twin of
-    * [[graft.streaming.CurationStream.compactSeenTable]] (VERDICT r12 #2:
+    * directories and publish them behind the pointer (VERDICT r12 #2:
     * unbounded delta-appends are a small-file scale-killer). Row-identical
     * by construction (one bucketed rewrite of the same rows), keeps the
     * co-located `codes JOIN cells ON id` search property, collapses each
     * bucket's delta fragments to one sorted file; the old directories
-    * survive one more state change (reader grace window). */
+    * survive the retention window. */
   def compactIvfPq(spark: org.apache.spark.sql.SparkSession, dir: String,
                    leaseMs: Long = graft.core.Fs.NoLease): Unit =
-    graft.core.Fs.withLock(spark, s"$dir/_delta_lock",
-      "re-run the interrupted compaction (the old tables are still the " +
-        "published ones until the pointer flips)", leaseMs = leaseMs) {
+    ivfPqStore(dir).locked(spark, "re-run the interrupted compaction (the " +
+        "old tables are still the published ones until the pointer flips)",
+        leaseMs) {
       compactIvfPq0(spark, dir)
     }
 
   private def compactIvfPq0(spark: org.apache.spark.sql.SparkSession,
                             dir: String): Unit = {
     val m = readIvfPqMeta(spark, dir)
-    val (cdir, kdir) = ivfPqTableDirs(m)
-    attachIvfPqTable(spark, dir, cdir, m.buckets)
-    attachIvfPqTable(spark, dir, kdir, m.buckets)
-    val next = graft.core.Fs.readPointer(spark, dir).getOrElse(-1L) + 1
-    // shuffle-free bucket-aligned rewrite, one file per bucket (see
-    // CurationStream.compactSeenTable0 for why the scan must be pinned)
-    graft.core.Bucketing.withForcedBucketedScan(spark) {
-      graft.core.Bucketing.writeBucketed(
-        spark.table(ivfPqTable(dir, cdir)),
-        ivfPqTable(dir, s"cells_v$next"), s"$dir/cells_v$next", "id",
-        m.buckets)
-      graft.core.Bucketing.writeBucketed(
-        spark.table(ivfPqTable(dir, kdir)),
-        ivfPqTable(dir, s"codes_v$next"), s"$dir/codes_v$next", "id",
-        m.buckets)
+    val s = ivfPqStore(dir)
+    val next = s.version(spark) + 1
+    for (t <- Seq("cells", "codes")) {
+      attachIvfPqTable(spark, dir, s"${t}_v${m.tableV}", m.buckets)
+      s.rewrite(spark, s"${t}_v${m.tableV}", s"${t}_v$next", "id", m.buckets)
     }
-    val files = parquetFileCount(spark, s"$dir/cells_v$next") +
-      parquetFileCount(spark, s"$dir/codes_v$next")
-    writeIvfPqMeta(spark, dir, IvfPqMeta(m.buckets, tableV = next,
-      deltas = 0L, files = files), next)
-    graft.core.Fs.writePointer(spark, dir, next)
+    val files = publishFullWrite(spark, dir, m.buckets, next)
     System.err.println(s"[compactIvfPq] $dir compacted to version $next " +
       s"($files files, ${m.buckets} buckets)")
-    pruneIvfPqVersions(spark, dir)
   }
 
   /** Search: each query coarse-assigns to its nearest cell, residualizes

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.core.{CacheScope, Stages}
+import graft.core.{CacheScope, Stages, VersionedStore}
 import graft.functions.TextFunctions.{hash60, tokens}
 import graft.operators.{Dedup, Dsir, Sketches, TextAnalysis, TextRanking}
 
@@ -53,7 +53,7 @@ object CurationStream {
     * candidate rows. Blooms are sharded tables (shard, word, bits);
     * `evalBloomBits`/`seenBloomBits` are bits PER SHARD, `evalKeys`/
     * `seenKeys` the measured distinct-key counts the geometry was sized
-    * for (-1 = unknown, for models loaded from pre-round-12 artifacts). */
+    * for. */
   final case class FrozenCuration(
       weights: DataFrame, numBuckets: Int, scoreMaxMicro: Long,
       temperature: Double,
@@ -446,7 +446,6 @@ object CurationStream {
     val candidates = Sketches.bloomPruneSharded(m.seenBloom, newHashes,
       "h", m.seenShards, m.seenBloomBits, m.bloomHashes)
     val dups = m.seenHashes.join(broadcast(candidates), Seq("h"), "semi")
-    val baseKeys = if (m.seenKeys >= 0) m.seenKeys else m.seenHashes.count()
     // the batch-sized delta feeds three consumers (its row count, the
     // Bloom delta, the union), so it is kept once. It is freed here, not
     // left to a caller's release: the advanced tables below are leaves
@@ -454,7 +453,7 @@ object CurationStream {
     val fresh = CacheScope.materialize(
       newHashes.join(broadcast(dups), Seq("h"), "left_anti"),
       tracked = false)
-    val n2 = baseKeys + CacheScope.rowCount(fresh)
+    val n2 = m.seenKeys + CacheScope.rowCount(fresh)
     if (n2 * m.bitsPerKey.toLong >
         m.seenShards.toLong * m.seenBloomBits.toLong)
       System.err.println(s"[extendSeen] seen history ($n2 keys) has " +
@@ -477,43 +476,32 @@ object CurationStream {
     } finally CacheScope.free(fresh)
   }
 
-  /** Rebuild the stored seen Bloom from the stored hash table — the
-    * recovery path for an artifact whose filter is suspect (e.g. a
-    * pre-round-13 artifact whose in-place overwrite was interrupted; a
-    * versioned artifact never needs this for crashes — the pointer still
-    * serves the previous complete version — but it remains the honest
-    * answer to filter saturation without a full re-freeze: the geometry
-    * stays what the meta records; re-freeze to re-measure). The rebuilt
-    * filter publishes like any delta: a NEW `seen_bloom_v<N>` + meta,
-    * then one atomic pointer flip. */
+  /** Rebuild the stored seen Bloom from the stored hash table: the answer
+    * to a suspect or saturated filter short of a full re-freeze (the
+    * geometry stays what the meta records; re-freeze to re-measure). A
+    * crash never needs it: the pointer still serves the previous complete
+    * version. The rebuilt filter publishes like any delta: a NEW
+    * `seen_bloom_v<N>` + meta, then one pointer marker. */
   def rebuildSeenBloom(spark: org.apache.spark.sql.SparkSession,
                        dir: String,
                        leaseMs: Long = graft.core.Fs.NoLease): Unit = {
-    graft.core.Fs.requireAtomicStore(spark, dir, "rebuildSeenBloom")
+    val s = store(dir)
     // under the delta lock like every other state writer (round 15): a
     // rebuild racing a live delta would interleave two publishes of the
     // same next version — the create-only pointer makes the loser fail
     // LOUDLY rather than silently overwrite, but the loser could still
     // have overwritten the winner's freshly-written seen_bloom_v<next>
     // files before losing; single-writer is the only safe contract
-    graft.core.Fs.withLock(spark, s"$dir/_delta_lock",
-      "re-run the rebuild (it writes a fresh version; the pointer still " +
-        "serves the previous complete state)", leaseMs = leaseMs) {
+    s.locked(spark, "re-run the rebuild (it writes a fresh version; the " +
+        "pointer still serves the previous complete state)", leaseMs) {
       val am = readMeta(spark, dir)
-      val seen =
-        if (am.confirmBuckets > 0) {
-          val (sub, suffix) = seenTableNames(am)
-          attachConfirmTable(spark, dir, suffix, sub, "h STRING", "h",
-            am.confirmBuckets)
-        } else spark.read.parquet(s"$dir/seen_hashes")
-      val next = stateVersion(spark, dir) + 1
+      val next = s.version(spark) + 1
       // one write into a directory the plan never reads
-      Sketches.bloomBuildSharded(seen, "h", am.seenShards, am.seenBloomBits,
-          am.bloomHashes)
-        .write.mode("overwrite").parquet(s"$dir/seen_bloom_v$next")
-      writeMeta(spark, dir, am.copy(seenBloomV = next), next)
-      graft.core.Fs.writePointer(spark, dir, next)
-      pruneVersions(spark, dir)
+      Sketches.bloomBuildSharded(seenTable(spark, s, am), "h", am.seenShards,
+          am.seenBloomBits, am.bloomHashes)
+        .write.mode("overwrite").parquet(s.path(s"seen_bloom_v$next"))
+      writeMeta(spark, s, am.copy(seenBloomV = next), next)
+      s.publish(spark, next)
     }
   }
 
@@ -592,22 +580,15 @@ object CurationStream {
                     textCol: String = "text",
                     compactEvery: Int = 64,
                     leaseMs: Long = graft.core.Fs.NoLease): Unit = {
+    // fresh-session friendly: the stored bucketed table is attached here
+    // if this JVM never ran save()/load() — a day-2 delta job must not
+    // require the day-1 session's catalog
     val spark = accepted.sparkSession
-    // fresh-session friendly: attach the stored bucketed table if this
-    // JVM never ran save()/load() — a day-2 delta job must not require
-    // the day-1 session's catalog. Existence via the Hadoop FileSystem
-    // API: java.io.File is always-false on hdfs:///s3a:// (ADVICE r11).
-    require(graft.core.Fs.pointerExists(spark, dir) ||
-        graft.core.Fs.exists(spark, s"$dir/meta"),
-      s"no saved artifact at $dir (run save() once before deltas)")
-    graft.core.Fs.withLock(spark, s"$dir/_delta_lock",
-      "re-run the interrupted delta (the append is idempotent and the " +
-        "pointer still serves the previous complete state)",
-      leaseMs = leaseMs) {
+    val s = store(dir)
+    s.locked(spark, "re-run the interrupted delta (the append is " +
+        "idempotent and the pointer still serves the previous complete " +
+        "state)", leaseMs) {
       val am = readMeta(spark, dir)
-      require(am.confirmBuckets > 0,
-        s"artifact at $dir predates bucketed confirm tables (round 11) — " +
-          "re-save() the model once before applying deltas")
       if (am.seenShards != m.seenShards ||
           am.seenBloomBits != m.seenBloomBits ||
           am.bloomHashes != m.bloomHashes)
@@ -615,10 +596,6 @@ object CurationStream {
           s"(${m.seenShards}x${m.seenBloomBits}/${m.bloomHashes}) differs " +
           s"from the artifact's (${am.seenShards}x${am.seenBloomBits}/" +
           s"${am.bloomHashes}); the artifact's geometry is used")
-      val (sub, suffix) = seenTableNames(am)
-      attachConfirmTable(spark, dir, suffix, sub, "h STRING", "h",
-        am.confirmBuckets)
-      val table = confirmTable(dir, suffix)
       // localCheckpoint, not a persist or a materialize leaf: the delta's
       // anti-join reads the very table the append below mutates, and both
       // keep lineage, so a block recomputed after the append (cache
@@ -627,32 +604,25 @@ object CurationStream {
       // pre-append row set for the count, the Bloom delta and the append
       val newHashes = accepted.select(md5(col(textCol)).as("h"))
         .filter(col("h").isNotNull).distinct()
-        .join(spark.table(table), Seq("h"), "left_anti")
+        .join(seenTable(spark, s, am), Seq("h"), "left_anti")
         .localCheckpoint(true)
       val nNew = newHashes.count()
       if (nNew > 0) {
-        val stored = spark.read.parquet(bloomPath(dir, am))
-        val storedSharded =
-          if (stored.columns.contains("shard")) stored
-          else stored.withColumn("shard", lit(0)) // pre-round-12 filter
-        val next = stateVersion(spark, dir) + 1
-        // one write into a fresh version directory: `stored` is an older
-        // version (or the legacy `seen_bloom`), never `seen_bloom_v$next`
-        Sketches.bloomMergeSharded(Seq(storedSharded,
+        val next = s.version(spark) + 1
+        // one write into a fresh version directory: the merge reads an
+        // older version, never `seen_bloom_v$next`
+        Sketches.bloomMergeSharded(Seq(
+            spark.read.parquet(s.path(s"seen_bloom_v${am.seenBloomV}")),
             Sketches.bloomBuildSharded(newHashes, "h", am.seenShards,
               am.seenBloomBits, am.bloomHashes)))
-          .write.mode("overwrite").parquet(s"$dir/seen_bloom_v$next")
-        writeMeta(spark, dir, am.copy(
-          seenKeys = if (am.seenKeys >= 0) am.seenKeys + nNew else -1L,
-          seenBloomV = next,
-          seenTableDeltas = math.max(0L, am.seenTableDeltas) + 1L), next)
-        graft.core.Fs.writePointer(spark, dir, next)
+          .write.mode("overwrite").parquet(s.path(s"seen_bloom_v$next"))
+        writeMeta(spark, s, am.copy(seenKeys = am.seenKeys + nNew,
+          seenBloomV = next, seenTableDeltas = am.seenTableDeltas + 1L), next)
+        s.publish(spark, next)
         // insertInto appends bucket-encoded files under the table's own
         // bucketing spec — the frozen side stays exchange-free
-        newHashes.write.mode("append").insertInto(table)
-        pruneVersions(spark, dir)
-        if (compactEvery > 0 &&
-            math.max(0L, am.seenTableDeltas) + 1L >= compactEvery)
+        newHashes.write.mode("append").insertInto(s.table(seenSub(am)))
+        if (compactEvery > 0 && am.seenTableDeltas + 1L >= compactEvery)
           compactSeenTable0(spark, dir)
       }
     }
@@ -665,50 +635,28 @@ object CurationStream {
     * invisible in any plan). The rewrite goes through the SAME bucketed
     * writer as [[save]], so the compacted table is row-identical, keeps
     * the co-located exchange-free confirm-join property (spec-pinned),
-    * and collapses to ONE file per bucket. The old directory survives one
-    * more state change (reader grace window), then [[pruneVersions]]
-    * removes it. The measured post-compaction file count and a zeroed
-    * delta counter land in the meta, so [[load]] can warn about a
-    * fragmented table from data ([[FragmentationWarnDeltas]]). */
+    * and collapses to ONE file per bucket. The old directory survives the
+    * retention window, then the prune removes it. The measured
+    * post-compaction file count and a zeroed delta counter land in the
+    * meta, so [[load]] can warn about a fragmented table from data. */
   def compactSeenTable(spark: org.apache.spark.sql.SparkSession,
                        dir: String,
                        leaseMs: Long = graft.core.Fs.NoLease): Unit =
-    graft.core.Fs.withLock(spark, s"$dir/_delta_lock",
-      "re-run the interrupted compaction (the old table is still the " +
-        "published one until the pointer flips)", leaseMs = leaseMs) {
+    store(dir).locked(spark, "re-run the interrupted compaction (the old " +
+        "table is still the published one until the pointer flips)",
+        leaseMs) {
       compactSeenTable0(spark, dir)
     }
 
   /** Compaction body — callers hold the delta lock. */
   private def compactSeenTable0(spark: org.apache.spark.sql.SparkSession,
                                 dir: String): Unit = {
+    val s = store(dir)
     val am = readMeta(spark, dir)
-    require(am.confirmBuckets > 0,
-      s"artifact at $dir predates bucketed confirm tables — re-save() first")
-    val (sub, suffix) = seenTableNames(am)
-    attachConfirmTable(spark, dir, suffix, sub, "h STRING", "h",
-      am.confirmBuckets)
-    val next = stateVersion(spark, dir) + 1
-    val newSub = s"seen_hashes_v$next"
-    // SHUFFLE-FREE rewrite, one file per bucket: force the BUCKETED scan
-    // of the old table (one task per bucket holding all that bucket's
-    // delta fragments), so the bucketBy write emits exactly one file per
-    // bucket with zero data movement. Without the pin Spark's planner
-    // both removes an explicit repartition ("child already distributes
-    // by the bucket key") AND then auto-disables the bucketed scan as
-    // unneeded — leaving size-packed file splits whose every task spans
-    // many buckets, i.e. a re-fragmented "compaction".
-    graft.core.Bucketing.withForcedBucketedScan(spark) {
-      graft.core.Bucketing.writeBucketed(
-        spark.table(confirmTable(dir, suffix)),
-        confirmTable(dir, s"seen_v$next"), s"$dir/$newSub", "h",
-        am.confirmBuckets)
-    }
-    val files = {
-      val p = new org.apache.hadoop.fs.Path(s"$dir/$newSub")
-      p.getFileSystem(spark.sessionState.newHadoopConf())
-        .listStatus(p).count(st => st.getPath.getName.endsWith(".parquet"))
-    }
+    seenTable(spark, s, am)
+    val next = s.version(spark) + 1
+    val sub = s"seen_hashes_v$next"
+    val files = s.rewrite(spark, seenSub(am), sub, "h", am.confirmBuckets)
     // exact seen-key RECOUNT (ADVICE r13): a crash between the delta's
     // pointer flip and its hash append, followed by the documented
     // re-run, increments seen_keys by nNew TWICE (the re-run's anti-join
@@ -716,14 +664,13 @@ object CurationStream {
     // saturation warning prematurely. The compaction just rewrote the
     // whole table, so the recount is parquet-footer-only over the fresh
     // files and seen_keys self-heals to exact every compactEvery deltas.
-    val exactKeys = spark.table(confirmTable(dir, s"seen_v$next")).count()
-    writeMeta(spark, dir, am.copy(seenTableV = next, seenTableDeltas = 0L,
-      seenTableFiles = files.toLong, seenKeys = exactKeys), next)
-    graft.core.Fs.writePointer(spark, dir, next)
+    val exactKeys = spark.table(s.table(sub)).count()
+    writeMeta(spark, s, am.copy(seenTableV = next, seenTableDeltas = 0L,
+      seenTableFiles = files, seenKeys = exactKeys), next)
+    s.publish(spark, next)
     System.err.println(s"[compactSeenTable] $dir seen table compacted to " +
       s"version $next ($files files, ${am.confirmBuckets} buckets, " +
       s"$exactKeys keys recounted)")
-    pruneVersions(spark, dir)
   }
 
   /** Free every frozen artifact (model tables included) — the explicit
@@ -732,325 +679,131 @@ object CurationStream {
     * tables recompute. */
   def release(m: FrozenCuration): Unit = m.tables.foreach(CacheScope.free)
 
-  /** Stable catalog table name for a bucketed confirm table of the
-    * artifact at `dir` (bucketed reads go through the catalog — a plain
-    * parquet read would not know the bucketing). */
-  private[graft] def confirmTable(dir: String, suffix: String): String = {
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    s"graft_frozen_${digest.take(12)}_$suffix"
-  }
+  /** The saved artifact at `dir` ([[graft.core.VersionedStore]]): the seen
+    * Bloom and the seen confirm table are its two versioned families,
+    * and `keep_generations` its retention window. The frozen-side tables
+    * (`weights`, `eval_shingles`, `eval_bloom`, `kn3_logprobs`) are
+    * written once by [[save]]. */
+  private[graft] def store(dir: String): VersionedStore =
+    VersionedStore("frozen", dir,
+      Seq("seen_bloom" -> "seen_bloom_v", "seen_hashes" -> "seen_table_v"),
+      keepCol = Some("keep_generations"))
 
-  /** Catalog-attach one bucketed confirm table of the artifact at `dir`
-    * — shared by [[load]] and [[saveSeenDelta]] so a FRESH session can
-    * run either without the other. The path literal is quote-escaped
-    * (a directory name with a `'` must not break — or inject into — the
-    * DDL). */
-  private def attachConfirmTable(spark: org.apache.spark.sql.SparkSession,
-      dir: String, suffix: String, name: String, ddl: String, key: String,
-      buckets: Int): DataFrame = {
-    val table = confirmTable(dir, suffix)
-    if (!spark.catalog.tableExists(table)) {
-      val loc = s"$dir/$name".replace("'", "''")
-      spark.sql(s"CREATE TABLE $table ($ddl) USING PARQUET " +
-        s"CLUSTERED BY ($key) SORTED BY ($key) INTO $buckets BUCKETS " +
-        s"LOCATION '$loc'")
-    } else
-      // another session (a foreachBatch clone, a sibling day-2 job) may
-      // have bucket-appended deltas since THIS session cached the
-      // relation — an attach must never serve a stale file listing
-      spark.catalog.refreshTable(table)
-    spark.table(table)
-  }
+  private def seenSub(am: ArtifactMeta): String =
+    s"seen_hashes_v${am.seenTableV}"
 
-  /** The artifact's scalar state — one row under the CURRENT meta path
-    * (see [[metaPath]]). The four schema generations all read through
-    * here (ADVICE r11: load() must not field-not-found on an older
-    * artifact):
-    *  - pre-round-11: one `bloom_bits` for both filters, NO
-    *    `confirm_buckets` (plain-parquet confirm tables);
-    *  - round-11: split bloom bits + `confirm_buckets`;
-    *  - round-12: + `bits_per_key`, shard counts and measured key counts
-    *    (unsharded filters read as 1 shard; unknown counts as -1);
-    *  - round-13: + versioned mutable state (`seen_bloom_v`/
-    *    `seen_table_v` name the live `seen_bloom_v<N>` / `seen_hashes_v<N>`
-    *    paths; -1 = the legacy unversioned paths) and the fragmentation
-    *    stats `seen_table_deltas` (bucket-appends since the last full
-    *    write) / `seen_table_files` (file count at that write);
-    *  - round-14: + `keep_generations` (VERDICT r13 #8), the save-time
-    *    retention knob [[pruneVersions]] honors — how many state
-    *    generations back a concurrent reader is guaranteed to find
-    *    (missing = the historical 2). */
+  /** Catalog-attach the live seen confirm table. */
+  private def seenTable(spark: org.apache.spark.sql.SparkSession,
+                        s: VersionedStore, am: ArtifactMeta): DataFrame =
+    s.attach(spark, seenSub(am), "h", am.confirmBuckets, "h STRING")
+
+  /** The artifact's scalar state — the one row of `meta_v<N>`:
+    *  - the frozen model's scalars and Bloom geometry (split eval/seen
+    *    bits, shard counts, `bits_per_key`), and the measured key counts
+    *    the geometry was sized for;
+    *  - `confirm_buckets`, the bucket count of both confirm tables;
+    *  - `seen_bloom_v` / `seen_table_v`, the live `seen_bloom_v<N>` /
+    *    `seen_hashes_v<N>` generations;
+    *  - `seen_table_deltas` (bucket-appends since the last full write)
+    *    and `seen_table_files` (file count at that write);
+    *  - `keep_generations`, the save-time retention window (VERDICT r13
+    *    #8): how many state generations back a concurrent reader is
+    *    guaranteed to find. */
   private[graft] final case class ArtifactMeta(
       numBuckets: Int, scoreMaxMicro: Long, temperature: Double,
       ceCutMicro: Long, shingleN: Int, evalBloomBits: Int,
       seenBloomBits: Int, bloomHashes: Int, confirmBuckets: Int,
       bitsPerKey: Int, evalShards: Int, seenShards: Int,
-      evalKeys: Long, seenKeys: Long,
-      seenBloomV: Long = -1L, seenTableV: Long = -1L,
-      seenTableDeltas: Long = -1L, seenTableFiles: Long = -1L,
-      keepGenerations: Int = 2)
+      evalKeys: Long, seenKeys: Long, seenBloomV: Long, seenTableV: Long,
+      seenTableDeltas: Long, seenTableFiles: Long, keepGenerations: Int)
 
-  /** Current state version of the artifact at `dir`; -1 for a
-    * pre-round-13 artifact (unversioned `meta` path). */
+  /** The meta columns, in [[ArtifactMeta]]'s field order. */
+  private val MetaCols = Seq("num_buckets", "score_max_micro",
+    "temperature", "ce_cut_micro", "shingle_n", "eval_bloom_bits",
+    "seen_bloom_bits", "bloom_hashes", "confirm_buckets", "bits_per_key",
+    "eval_shards", "seen_shards", "eval_keys", "seen_keys", "seen_bloom_v",
+    "seen_table_v", "seen_table_deltas", "seen_table_files",
+    "keep_generations")
+
+  /** Current state version of the artifact at `dir`; -1 if unpublished. */
   private[graft] def stateVersion(spark: org.apache.spark.sql.SparkSession,
                                   dir: String): Long =
-    graft.core.Fs.readPointer(spark, dir).getOrElse(-1L)
-
-  private def metaPath(dir: String, v: Long): String =
-    if (v >= 0) s"$dir/meta_v$v" else s"$dir/meta"
-
-  private def bloomPath(dir: String, am: ArtifactMeta): String =
-    if (am.seenBloomV >= 0) s"$dir/seen_bloom_v${am.seenBloomV}"
-    else s"$dir/seen_bloom"
-
-  /** (subdirectory, catalog-table suffix) of the live seen confirm table
-    * — versioned after the first round-13 compaction, legacy before. */
-  private def seenTableNames(am: ArtifactMeta): (String, String) =
-    if (am.seenTableV >= 0)
-      (s"seen_hashes_v${am.seenTableV}", s"seen_v${am.seenTableV}")
-    else ("seen_hashes", "seen")
+    store(dir).version(spark)
 
   // pointer-resolved accessors for tests / operational introspection
   private[graft] def seenBloomPath(
       spark: org.apache.spark.sql.SparkSession, dir: String): String =
-    bloomPath(dir, readMeta(spark, dir))
+    store(dir).path(s"seen_bloom_v${readMeta(spark, dir).seenBloomV}")
   private[graft] def seenTableName(
       spark: org.apache.spark.sql.SparkSession, dir: String): String =
-    confirmTable(dir, seenTableNames(readMeta(spark, dir))._2)
+    store(dir).table(seenSub(readMeta(spark, dir)))
   private[graft] def seenTableDir(
       spark: org.apache.spark.sql.SparkSession, dir: String): String =
-    s"$dir/${seenTableNames(readMeta(spark, dir))._1}"
+    store(dir).path(seenSub(readMeta(spark, dir)))
   private[graft] def currentMetaPath(
       spark: org.apache.spark.sql.SparkSession, dir: String): String =
-    metaPath(dir, stateVersion(spark, dir))
+    store(dir).metaPath(stateVersion(spark, dir))
 
   private[graft] def readMeta(
       spark: org.apache.spark.sql.SparkSession,
       dir: String): ArtifactMeta = {
-    val df = spark.read.parquet(metaPath(dir, stateVersion(spark, dir)))
-    val cols = df.columns.toSet
-    val r = df.head()
-    def i(name: String, dflt: => Int): Int =
-      if (cols(name)) r.getAs[Int](name) else dflt
-    def l(name: String, dflt: => Long): Long =
-      if (cols(name)) r.getAs[Long](name) else dflt
-    ArtifactMeta(
-      numBuckets = r.getAs[Int]("num_buckets"),
-      scoreMaxMicro = r.getAs[Long]("score_max_micro"),
-      temperature = r.getAs[Double]("temperature"),
-      ceCutMicro = r.getAs[Long]("ce_cut_micro"),
-      shingleN = r.getAs[Int]("shingle_n"),
-      evalBloomBits = i("eval_bloom_bits", r.getAs[Int]("bloom_bits")),
-      seenBloomBits = i("seen_bloom_bits", r.getAs[Int]("bloom_bits")),
-      bloomHashes = r.getAs[Int]("bloom_hashes"),
-      confirmBuckets = i("confirm_buckets", -1),
-      bitsPerKey = i("bits_per_key", 10),
-      evalShards = i("eval_shards", 1),
-      seenShards = i("seen_shards", 1),
-      evalKeys = l("eval_keys", -1L),
-      seenKeys = l("seen_keys", -1L),
-      seenBloomV = l("seen_bloom_v", -1L),
-      seenTableV = l("seen_table_v", -1L),
-      seenTableDeltas = l("seen_table_deltas", -1L),
-      seenTableFiles = l("seen_table_files", -1L),
-      keepGenerations = i("keep_generations", 2))
+    val enc = org.apache.spark.sql.Encoders.product[ArtifactMeta]
+    store(dir).current(spark).select(MetaCols.map(col): _*)
+      .toDF(enc.schema.fieldNames.toIndexedSeq: _*).as(enc).head()
   }
 
   /** Write the one-row meta to the version-`v` path (the caller publishes
-    * it afterwards with one atomic pointer flip — this never touches the
-    * LIVE meta, closing the torn-write window of the old in-place
-    * overwrite: VERDICT r12 #1 / ADVICE r12 #1). */
+    * it afterwards — this never touches the LIVE meta, closing the
+    * torn-write window of an in-place overwrite: VERDICT r12 #1). */
   private def writeMeta(spark: org.apache.spark.sql.SparkSession,
-                        dir: String, am: ArtifactMeta, v: Long): Unit = {
+                        s: VersionedStore, am: ArtifactMeta, v: Long): Unit = {
     import spark.implicits._
-    Seq((am.numBuckets, am.scoreMaxMicro, am.temperature, am.ceCutMicro,
-        am.shingleN, am.evalBloomBits, am.seenBloomBits, am.bloomHashes,
-        am.confirmBuckets, am.bitsPerKey, am.evalShards, am.seenShards,
-        am.evalKeys, am.seenKeys, am.seenBloomV, am.seenTableV,
-        am.seenTableDeltas, am.seenTableFiles, am.keepGenerations))
-      .toDF("num_buckets", "score_max_micro", "temperature",
-        "ce_cut_micro", "shingle_n", "eval_bloom_bits", "seen_bloom_bits",
-        "bloom_hashes", "confirm_buckets", "bits_per_key", "eval_shards",
-        "seen_shards", "eval_keys", "seen_keys", "seen_bloom_v",
-        "seen_table_v", "seen_table_deltas", "seen_table_files",
-        "keep_generations")
-      .coalesce(1).write.mode("overwrite").parquet(metaPath(dir, v))
+    s.writeMeta(Seq(am).toDF(MetaCols: _*), v)
   }
 
-  /** Delete state versions no in-flight reader can need: everything older
-    * than `keep_generations` back (the [[save]]-time knob in the meta,
-    * VERDICT r13 #8; floor TWO). Two is the floor, not a default
-    * optimum: a single `saveSeenDelta` call can bump the version TWICE
-    * (the delta publish plus its auto-compaction), so a keep-one-back
-    * rule could delete the state a reader resolved just before that one
-    * call — keep-two guarantees no single write API call outruns a
-    * concurrent reader. Raise the knob when readers can out-LAST two
-    * delta intervals (a long analytics scan over the seen table loses
-    * files mid-scan if deltas land faster than it reads). A version
-    * directory is kept if any retained meta still references it — a
-    * compaction bumps the table version while older metas still point at
-    * the old table, so the old history directory survives the same grace
-    * window. ([[vacuum]] is the explicit no-readers reclaim.) */
-  private def pruneVersions(spark: org.apache.spark.sql.SparkSession,
-                            dir: String): Unit = {
-    val cur = stateVersion(spark, dir)
-    if (cur < 0) return
-    val keep = math.max(2, readMeta0(spark, dir, cur).keepGenerations).toLong
-    val metas = (cur - keep to cur)
-      .filter(v => v >= 0 && graft.core.Fs.exists(spark, metaPath(dir, v)))
-      .map(v => readMeta0(spark, dir, v))
-    val keepBlooms = metas.map(_.seenBloomV).toSet
-    val keepTables = metas.map(_.seenTableV).toSet
-    val (f, p) = {
-      val hp = new org.apache.hadoop.fs.Path(dir)
-      (hp.getFileSystem(spark.sessionState.newHadoopConf()), hp)
-    }
-    if (!f.exists(p)) return
-    val Versioned = """(meta|seen_bloom|seen_hashes)_v(\d+)""".r
-    f.listStatus(p).foreach { st =>
-      st.getPath.getName match {
-        case Versioned("meta", v) if v.toLong < cur - keep =>
-          f.delete(st.getPath, true)
-        case Versioned("seen_bloom", v)
-            if v.toLong < cur && !keepBlooms(v.toLong) =>
-          f.delete(st.getPath, true)
-        case Versioned("seen_hashes", v)
-            if v.toLong < cur && !keepTables(v.toLong) =>
-          f.delete(st.getPath, true)
-          // the external-table catalog entry over the deleted location
-          // (harmless if this session never attached it)
-          spark.sql(
-            s"DROP TABLE IF EXISTS ${confirmTable(dir, s"seen_v$v")}")
-        case _ => ()
-      }
-    }
-    // the pre-round-13 unversioned paths count as the generation BEFORE
-    // v0: they stay for the same grace window after migration and go
-    // once no kept meta references them
-    if (cur >= keep) {
-      graft.core.Fs.delete(spark, s"$dir/meta")
-      if (!keepBlooms(-1L)) graft.core.Fs.delete(spark, s"$dir/seen_bloom")
-      if (!keepTables(-1L)) {
-        graft.core.Fs.delete(spark, s"$dir/seen_hashes")
-        spark.sql(s"DROP TABLE IF EXISTS ${confirmTable(dir, "seen")}")
-      }
-    }
-    // pointer markers ride the same retention window as the state files
-    // they name (create-only publish protocol, VERDICT r14 #1)
-    graft.core.Fs.prunePointers(spark, dir, cur - keep)
-  }
-
-  /** readMeta at an EXPLICIT version (prune needs the previous meta, not
-    * the pointer-resolved one). */
-  private def readMeta0(spark: org.apache.spark.sql.SparkSession,
-                        dir: String, v: Long): ArtifactMeta = {
-    val saved = spark.read.parquet(metaPath(dir, v))
-    val cols = saved.columns.toSet
-    val r = saved.head()
-    def l(name: String): Long =
-      if (cols(name)) r.getAs[Long](name) else -1L
-    ArtifactMeta(0, 0L, 0.0, 0L, 0, 0, 0, 0, 0, 0, 0, 0, -1L, -1L,
-      seenBloomV = l("seen_bloom_v"), seenTableV = l("seen_table_v"),
-      keepGenerations =
-        if (cols("keep_generations")) r.getAs[Int]("keep_generations") else 2)
-  }
-
-  /** Drop every state generation except the CURRENT one — the explicit
-    * storage-reclaim op for operators who KNOW no reader is mid-scan
-    * (the automatic [[pruneVersions]] always keeps the previous
-    * generation as the reader grace window, which for the history-sized
-    * seen table means up to 2x its storage between state changes). Runs
-    * under the delta lock: vacuuming concurrently with a delta could
-    * delete the very version the delta is superseding while the delta's
-    * reader still joins against it.
-    *
-    * Returns what was reclaimed (VERDICT r13 #9) so artifact hygiene is
-    * monitorable as data — append `.toDF` to a run manifest. */
+  /** Drop every state generation except the CURRENT one
+    * ([[graft.core.VersionedStore.vacuum]]); returns what was reclaimed
+    * (VERDICT r13 #9), so artifact hygiene is monitorable as data —
+    * append `.toDF` to a run manifest. */
   def vacuum(spark: org.apache.spark.sql.SparkSession, dir: String,
              leaseMs: Long = graft.core.Fs.NoLease): graft.core.VacuumStats =
-    graft.core.Fs.withLock(spark, s"$dir/_delta_lock",
-      "re-run the vacuum (it only deletes non-current state)",
-      leaseMs = leaseMs) {
-      var stats = graft.core.VacuumStats.Zero
-      val cur = stateVersion(spark, dir)
-      if (cur >= 0) { // pre-round-13 artifacts have nothing versioned
-        val am = readMeta(spark, dir)
-        val (f, p) = {
-          val hp = new org.apache.hadoop.fs.Path(dir)
-          (hp.getFileSystem(spark.sessionState.newHadoopConf()), hp)
-        }
-        val Versioned = """(meta|seen_bloom|seen_hashes)_v(\d+)""".r
-        f.listStatus(p).foreach { st =>
-          st.getPath.getName match {
-            case Versioned("meta", v) if v.toLong != cur =>
-              stats += graft.core.VacuumStats.delete(f, st.getPath)
-            case Versioned("seen_bloom", v) if v.toLong != am.seenBloomV =>
-              stats += graft.core.VacuumStats.delete(f, st.getPath)
-            case Versioned("seen_hashes", v) if v.toLong != am.seenTableV =>
-              stats += graft.core.VacuumStats.delete(f, st.getPath)
-              spark.sql(
-                s"DROP TABLE IF EXISTS ${confirmTable(dir, s"seen_v$v")}")
-            case _ => ()
-          }
-        }
-        for (legacy <- Seq("meta", "seen_bloom", "seen_hashes")
-             if (legacy != "seen_bloom" || am.seenBloomV >= 0) &&
-               (legacy != "seen_hashes" || am.seenTableV >= 0)) {
-          val lp = new org.apache.hadoop.fs.Path(s"$dir/$legacy")
-          if (f.exists(lp))
-            stats += graft.core.VacuumStats.delete(f, lp)
-          if (legacy == "seen_hashes")
-            spark.sql(s"DROP TABLE IF EXISTS ${confirmTable(dir, "seen")}")
-        }
-        graft.core.Fs.prunePointers(spark, dir, cur)
-      }
-      stats
-    }
+    store(dir).vacuum(spark, leaseMs)
 
   /** Rows per confirm bucket targeted by [[save]]'s auto-sizer: one
-    * bucket of hash/shingle rows stays a few MB (comfortably inside an
-    * executor core) while the bucket count GROWS with the history — a
-    * 10^10-key seen set auto-sizes to ~38k buckets, the "think 32k at
-    * 100TB" number, instead of a fixed constant silently becoming the
-    * confirm joins' parallelism ceiling (VERDICT r11 #2). */
+    * bucket of hash/shingle rows stays a few MB while the bucket count
+    * GROWS with the history — a 10^10-key seen set auto-sizes to ~38k
+    * buckets (VERDICT r11 #2). */
   private val TargetRowsPerBucket = 1L << 18
 
-  /** Deltas since the last compaction past which [[load]] warns about
-    * table fragmentation (deltas + 1 ≈ files per bucket). */
-  private val FragmentationWarnDeltas = 32L
-
   /** Persist a frozen model to `dir` as files: six parquet tables + a
-    * one-row `meta` parquet carrying the scalars. This is what makes the
-    * freeze/apply split a real DEPLOYMENT: train once in one job, ship
-    * the artifact directory, [[load]] and [[curateBatch]] in any number
-    * of downstream jobs/JVMs without the reference corpus. Artifact
-    * size is geometry + eval/history-sized — the corpus never ships.
+    * one-row `meta_v<N>` parquet carrying the scalars. This is what makes
+    * the freeze/apply split a real DEPLOYMENT: train once in one job,
+    * ship the artifact directory, [[load]] and [[curateBatch]] in any
+    * number of downstream jobs/JVMs without the reference corpus.
+    * Artifact size is geometry + eval/history-sized — the corpus never
+    * ships.
     *
-    * The two EXACT-CONFIRM tables (`eval_shingles`, `seen_hashes`) are
-    * written BUCKETED + sorted on their join key (VERDICT r10 #3): they
-    * are the only history-sized tables the per-batch confirms join, and
-    * a plain-parquet frozen side re-shuffles that history on EVERY
+    * The two EXACT-CONFIRM tables (`eval_shingles`, `seen_hashes_v<N>`)
+    * are written BUCKETED + sorted on their join key (VERDICT r10 #3):
+    * they are the only history-sized tables the per-batch confirms join,
+    * and a plain-parquet frozen side re-shuffles that history on EVERY
     * curateBatch. Bucketed, the loaded scan reports hash partitioning on
     * the key, so each confirm join exchanges only the (Bloom-pruned,
     * batch-sized) arriving side — plan-pinned in StreamingSpec.
     *
     * `confirmBuckets` AUTO-SIZES from the measured key counts by default
-    * (VERDICT r11 #2): max(cluster parallelism, 32, keys /
-    * [[TargetRowsPerBucket]]), logged — a fixed bucket count is a silent
-    * parallelism ceiling once histories outgrow it. Pass an explicit
-    * count to pin it (tests / cross-artifact layout compat).
+    * ([[graft.core.VersionedStore.autoBuckets]] at
+    * [[TargetRowsPerBucket]]). Pass an explicit count to pin it (tests /
+    * cross-artifact layout compat).
     *
     * FRESH-DIR CONTRACT, enforced (VERDICT r13 #3): save() REFUSES a
     * directory that already holds a published artifact. Only the mutable
-    * state (seen table/Bloom/meta) is versioned + pointer-flipped; the
-    * frozen-side tables (`weights`, `eval_shingles`, `eval_bloom`,
-    * `kn3_logprobs`) are rewritten IN PLACE, so a re-save over a live
-    * artifact tears them under any concurrent reader and a crash
-    * mid-save leaves them torn on disk with no previous version to fall
-    * back to. Publish a re-freeze to a FRESH directory; pass
-    * `force = true` only when provably no reader exists and a crashed
-    * re-save may be re-run to completion. */
+    * state (seen table/Bloom/meta) is versioned; the frozen-side tables
+    * are rewritten IN PLACE, so a re-save over a live artifact tears them
+    * under any concurrent reader and a crash mid-save leaves them torn on
+    * disk with no previous version to fall back to. Publish a re-freeze to
+    * a FRESH directory; pass `force = true` only when provably no reader
+    * exists and a crashed re-save may be re-run to completion. */
   def save(m: FrozenCuration, dir: String, confirmBuckets: Int = -1,
            force: Boolean = false, keepGenerations: Int = 2): Unit = {
     require(keepGenerations >= 2, s"keepGenerations=$keepGenerations: " +
@@ -1058,61 +811,30 @@ object CurationStream {
       "twice (delta + auto-compaction), so fewer grace generations lets a " +
       "single write API call outrun a concurrent reader")
     val spark = m.weights.sparkSession
-    graft.core.Fs.requireAtomicStore(spark, dir, "CurationStream.save")
-    if (!force && (graft.core.Fs.pointerExists(spark, dir) ||
-        graft.core.Fs.exists(spark, s"$dir/meta")))
-      throw new IllegalStateException(s"CurationStream.save: $dir already " +
-        "holds a published artifact. The frozen-side tables (weights, " +
-        "eval_shingles, eval_bloom, kn3_logprobs) are rewritten in place " +
-        "— re-saving over a LIVE artifact tears them for concurrent " +
-        "readers, and a crash mid-save leaves no complete version. " +
-        "Save the re-freeze to a fresh directory (deltas go through " +
-        "saveSeenDelta), or pass force = true if provably no reader " +
-        "exists.")
+    val s = store(dir)
+    val next = s.requireFresh(spark, "CurationStream.save", "The " +
+      "frozen-side tables (weights, eval_shingles, eval_bloom, " +
+      "kn3_logprobs)", force)
     val buckets =
       if (confirmBuckets > 0) confirmBuckets
-      else {
-        val ek = if (m.evalKeys >= 0) m.evalKeys else m.evalShingles.count()
-        val sk = if (m.seenKeys >= 0) m.seenKeys else m.seenHashes.count()
-        val b = math.max(
-          math.max(32, spark.sparkContext.defaultParallelism).toLong,
-          (math.max(ek, sk) + TargetRowsPerBucket - 1) / TargetRowsPerBucket
-        ).toInt
-        System.err.println(s"[CurationStream.save] confirmBuckets=$b " +
-          s"auto-sized (eval=$ek seen=$sk keys, target " +
-          s"$TargetRowsPerBucket rows/bucket)")
-        b
-      }
-    m.weights.write.mode("overwrite").parquet(s"$dir/weights")
-    graft.core.Bucketing.writeBucketed(m.evalShingles,
-      confirmTable(dir, "eval"), s"$dir/eval_shingles", "sh", buckets)
-    m.evalBloom.write.mode("overwrite").parquet(s"$dir/eval_bloom")
+      else VersionedStore.autoBuckets(spark, math.max(m.evalKeys, m.seenKeys),
+        TargetRowsPerBucket, "CurationStream.save")
+    m.weights.write.mode("overwrite").parquet(s.path("weights"))
+    s.writeTable(m.evalShingles, "eval_shingles", "sh", buckets)
+    m.evalBloom.write.mode("overwrite").parquet(s.path("eval_bloom"))
     // the MUTABLE state (seen table, seen Bloom, meta) is versioned from
-    // day 1 and published by one atomic pointer flip — the immutable
-    // frozen-side tables above are written in place, so a full re-save()
-    // into a LIVE artifact directory is not atomic for THEM (publish a
-    // re-freeze to a fresh directory instead; the delta path never
-    // rewrites them)
-    val next = stateVersion(spark, dir) + 1
-    graft.core.Bucketing.writeBucketed(m.seenHashes,
-      confirmTable(dir, s"seen_v$next"), s"$dir/seen_hashes_v$next", "h",
-      buckets)
-    m.seenBloom.write.mode("overwrite").parquet(s"$dir/seen_bloom_v$next")
-    m.kn3LogProbs.write.mode("overwrite").parquet(s"$dir/kn3_logprobs")
-    val files = {
-      val p = new org.apache.hadoop.fs.Path(s"$dir/seen_hashes_v$next")
-      p.getFileSystem(spark.sessionState.newHadoopConf())
-        .listStatus(p).count(st => st.getPath.getName.endsWith(".parquet"))
-    }
-    writeMeta(spark, dir, ArtifactMeta(m.numBuckets, m.scoreMaxMicro,
+    // day 1 and published by one pointer marker
+    s.writeTable(m.seenHashes, s"seen_hashes_v$next", "h", buckets)
+    m.seenBloom.write.mode("overwrite").parquet(s.path(s"seen_bloom_v$next"))
+    m.kn3LogProbs.write.mode("overwrite").parquet(s.path("kn3_logprobs"))
+    writeMeta(spark, s, ArtifactMeta(m.numBuckets, m.scoreMaxMicro,
       m.temperature, m.ceCutMicro, m.shingleN, m.evalBloomBits,
       m.seenBloomBits, m.bloomHashes, buckets, m.bitsPerKey,
       m.evalShards, m.seenShards, m.evalKeys, m.seenKeys,
       seenBloomV = next, seenTableV = next, seenTableDeltas = 0L,
-      seenTableFiles = files.toLong, keepGenerations = keepGenerations),
-      next)
-    graft.core.Fs.writePointer(spark, dir, next)
-    pruneVersions(spark, dir)
+      seenTableFiles = s.files(spark, s"seen_hashes_v$next"),
+      keepGenerations = keepGenerations), next)
+    s.publish(spark, next)
   }
 
   /** Artifact-hygiene MANIFEST (VERDICT r14 #8): one queryable row of
@@ -1122,40 +844,31 @@ object CurationStream {
     * from the run's other audit tables (e.g. union it next to
     * [[graft.core.VacuumStats.toDF]] rows in a run manifest), not an
     * operator reading logs. Columns:
-    *  - state_version: the CURRENT pointer (-1 = pre-versioned artifact);
-    *  - keep_generations: the [[save]]-time retention knob honored by
-    *    pruneVersions;
+    *  - state_version: the current pointer;
+    *  - keep_generations: the [[save]]-time retention window;
     *  - seen_keys / seen_table_deltas / seen_table_files: history size
     *    and fragmentation at the last full write (compaction resets
-    *    deltas; [[load]] warns past [[FragmentationWarnDeltas]]);
+    *    deltas; [[load]] warns past
+    *    [[graft.core.VersionedStore.FragmentationWarnDeltas]]);
     *  - versions_on_disk: meta_v<N> directories present (retention + any
     *    not-yet-pruned grace generations);
-    *  - pointer_markers: CURRENT.v<N> markers present (create-only
-    *    publish protocol; pruned with the same window). */
+    *  - pointer_markers: CURRENT.v<N> markers present (pruned with the
+    *    same window). */
   def manifest(spark: org.apache.spark.sql.SparkSession,
                dir: String): org.apache.spark.sql.DataFrame = {
     import spark.implicits._
     val am = readMeta(spark, dir)
-    val cur = stateVersion(spark, dir)
-    val (f, p) = {
-      val hp = new org.apache.hadoop.fs.Path(dir)
-      (hp.getFileSystem(spark.sessionState.newHadoopConf()), hp)
-    }
-    val names = f.listStatus(p).map(_.getPath.getName)
-    val metaVs = names.count(_.matches("meta_v\\d+"))
-    val markers = names.count(_.matches("CURRENT\\.v\\d+"))
+    val (cur, metaVs, markers) = store(dir).census(spark)
     Seq((cur, am.keepGenerations, am.seenKeys, am.seenTableDeltas,
-        am.seenTableFiles, metaVs.toLong, markers.toLong,
-        am.confirmBuckets, am.seenShards))
+        am.seenTableFiles, metaVs, markers, am.confirmBuckets, am.seenShards))
       .toDF("state_version", "keep_generations", "seen_keys",
         "seen_table_deltas", "seen_table_files", "versions_on_disk",
         "pointer_markers", "confirm_buckets", "seen_shards")
   }
 
-  /** Load a [[save]]d frozen model (any schema generation — see
-    * [[ArtifactMeta]]). Geometry-sized tables come back persisted with
-    * the same frozen lifetime the in-memory freeze gives them
-    * ([[release]] when done); scalars from the one-row meta table.
+  /** Load a [[save]]d frozen model. Geometry-sized tables come back
+    * persisted with the same frozen lifetime the in-memory freeze gives
+    * them ([[release]] when done); scalars from the one-row meta table.
     * The two bucketed confirm tables are NOT memory-persisted — they are
     * history-sized, and reading them through the catalog keeps the
     * bucketed hash partitioning that makes per-batch confirm joins
@@ -1172,25 +885,13 @@ object CurationStream {
     * time). */
   def load(spark: org.apache.spark.sql.SparkSession,
            dir: String): FrozenCuration = {
+    val s = store(dir)
     val am = readMeta(spark, dir)
-    def t(name: String): DataFrame =
-      spark.read.parquet(s"$dir/$name").persist()
-    def bloomT(path: String): DataFrame = {
-      val b = spark.read.parquet(path)
-      (if (b.columns.contains("shard")) b
-       else b.withColumn("shard", lit(0))) // pre-round-12 filter
-        .persist()
-    }
-    def confirm(suffix: String, name: String, ddl: String,
-                key: String): DataFrame =
-      if (am.confirmBuckets > 0)
-        attachConfirmTable(spark, dir, suffix, name, ddl, key,
-          am.confirmBuckets)
-      else spark.read.parquet(s"$dir/$name") // pre-round-11 artifact
+    def t(sub: String): DataFrame = spark.read.parquet(s.path(sub)).persist()
     for ((label, keys, shards, bits) <- Seq(
         ("eval", am.evalKeys, am.evalShards, am.evalBloomBits),
         ("seen", am.seenKeys, am.seenShards, am.seenBloomBits)))
-      if (keys >= 0 && keys * am.bitsPerKey.toLong > shards.toLong * bits)
+      if (keys * am.bitsPerKey.toLong > shards.toLong * bits)
         System.err.println(s"[CurationStream.load] $label Bloom at $dir " +
           s"is past its design point ($keys keys > $shards shard(s) x " +
           s"$bits bits / ${am.bitsPerKey} per key): FP prune degrades — " +
@@ -1198,22 +899,22 @@ object CurationStream {
     // fragmentation re-warn from DATA (VERDICT r12 task 7): the meta
     // carries appends-since-compaction, so a fragmented table warns at
     // every load without listing the (possibly huge) directory
-    if (am.seenTableDeltas > FragmentationWarnDeltas)
+    if (am.seenTableDeltas > VersionedStore.FragmentationWarnDeltas)
       System.err.println(s"[CurationStream.load] seen table at $dir has " +
         s"${am.seenTableDeltas} bucket-appended deltas since its last " +
         s"compaction (~${am.seenTableDeltas + 1} files per bucket x " +
         s"${am.confirmBuckets} buckets): listing/footer reads degrade — " +
         "run compactSeenTable(spark, dir)")
-    val (seenSub, seenSuffix) = seenTableNames(am)
     FrozenCuration(
       weights = t("weights"),
       numBuckets = am.numBuckets,
       scoreMaxMicro = am.scoreMaxMicro,
       temperature = am.temperature,
-      evalShingles = confirm("eval", "eval_shingles", "sh BIGINT", "sh"),
-      evalBloom = bloomT(s"$dir/eval_bloom"),
-      seenHashes = confirm(seenSuffix, seenSub, "h STRING", "h"),
-      seenBloom = bloomT(bloomPath(dir, am)),
+      evalShingles = s.attach(spark, "eval_shingles", "sh",
+        am.confirmBuckets, "sh BIGINT"),
+      evalBloom = t("eval_bloom"),
+      seenHashes = seenTable(spark, s, am),
+      seenBloom = t(s"seen_bloom_v${am.seenBloomV}"),
       kn3LogProbs = t("kn3_logprobs"),
       ceCutMicro = am.ceCutMicro,
       shingleN = am.shingleN,

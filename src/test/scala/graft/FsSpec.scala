@@ -182,12 +182,12 @@ class FsSpec extends AnyFunSuite {
        "SAME version get exactly one winner") {
     val dir = tmp("fs_ptr")
     assert(Fs.readPointer(spark, dir).isEmpty, "empty dir has no version")
-    assert(!Fs.pointerExists(spark, dir))
+    assert(Fs.readPointer(spark, dir).isEmpty)
     Fs.writePointer(spark, dir, 0L)
     assert(Fs.readPointer(spark, dir).contains(0L))
     Fs.writePointer(spark, dir, 1L)
     assert(Fs.readPointer(spark, dir).contains(1L))
-    assert(Fs.pointerExists(spark, dir))
+    assert(Fs.readPointer(spark, dir).nonEmpty)
     // racing publishers of the same version: second create must FAIL
     // LOUDLY (single-writer discipline broken upstream), never silently
     // absorb — on an object store a silent overwrite is exactly the torn
@@ -203,6 +203,16 @@ class FsSpec extends AnyFunSuite {
     }
     threads.foreach(_.start()); threads.foreach(_.join())
     assert(Fs.readPointer(spark, dir).contains(9L))
+    // prune behind the window: markers < 7 go
+    Fs.prunePointers(spark, dir, keepBelow = 7L)
+    val left = new java.io.File(dir).listFiles().map(_.getName).toSet
+    assert(left == Set("CURRENT.v7", "CURRENT.v8", "CURRENT.v9"),
+      s"got $left")
+    assert(Fs.readPointer(spark, dir).contains(9L))
+    // prune with an absurd window NEVER deletes the newest marker
+    Fs.prunePointers(spark, dir, keepBelow = 100L)
+    assert(Fs.readPointer(spark, dir).contains(9L),
+      "prune must never strand the artifact pointer-less")
   }
 
   test("create-only pointer: a torn-listing reader (newest marker not " +
@@ -226,44 +236,6 @@ class FsSpec extends AnyFunSuite {
     java.nio.file.Files.delete(
       java.nio.file.Paths.get(s"$dir/CURRENT.v1"))
     assert(Fs.readPointer(spark, dir).contains(0L))
-  }
-
-  test("create-only pointer: legacy rename-era CURRENT migrates by max())" +
-       " and prune trims old markers but never strands the artifact") {
-    val dir = tmp("fs_legacy")
-    // a round-13/14 artifact: rename-era one-line CURRENT, no markers
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$dir/CURRENT"), "5".getBytes("UTF-8"))
-    assert(Fs.readPointer(spark, dir).contains(5L))
-    // first create-only publish moves it onto markers; max() wins
-    Fs.writePointer(spark, dir, 6L)
-    Fs.writePointer(spark, dir, 7L)
-    Fs.writePointer(spark, dir, 8L)
-    assert(Fs.readPointer(spark, dir).contains(8L))
-    // a malformed legacy CURRENT fails LOUDLY (ADVICE r15): silently
-    // treating it as "no legacy candidate" let a corrupted rename-era
-    // artifact read as absent, unlocking save()'s overwrite guard
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$dir/CURRENT"), "junk".getBytes("UTF-8"))
-    val eCorrupt = intercept[IllegalStateException] {
-      Fs.readPointer(spark, dir)
-    }
-    assert(eCorrupt.getMessage.contains("unparseable"))
-    assert(intercept[IllegalStateException] {
-      Fs.pointerExists(spark, dir)
-    }.getMessage.contains("CURRENT"),
-      "pointerExists must never answer 'absent' over a corrupt CURRENT")
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$dir/CURRENT"), "5".getBytes("UTF-8"))
-    // prune behind the window: markers < 7 go, legacy CURRENT (5 < 7) goes
-    Fs.prunePointers(spark, dir, keepBelow = 7L)
-    val left = new java.io.File(dir).listFiles().map(_.getName).toSet
-    assert(left == Set("CURRENT.v7", "CURRENT.v8"), s"got $left")
-    assert(Fs.readPointer(spark, dir).contains(8L))
-    // prune with an absurd window NEVER deletes the newest marker
-    Fs.prunePointers(spark, dir, keepBelow = 100L)
-    assert(Fs.readPointer(spark, dir).contains(8L),
-      "prune must never strand the artifact pointer-less")
   }
 
   test("stale-lock takeover on a create-only store (no atomic rename) " +

@@ -682,7 +682,7 @@ class SimilaritySpec extends AnyFunSuite {
     // load must attach from disk (schema from the parquet footer);
     // save() writes versioned table dirs (round 13), first save = v0
     for (sfx <- Seq("cells_v0", "codes_v0"))
-      spark.sql("DROP TABLE IF EXISTS " + Similarity.ivfPqTable(dir, sfx))
+      spark.sql("DROP TABLE IF EXISTS " + Similarity.ivfPqStore(dir).table(sfx))
     val loaded = Similarity.loadIvfPq(spark, dir)
     val prevBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
@@ -825,8 +825,8 @@ class SimilaritySpec extends AnyFunSuite {
     assert(nCellsDelta > 0 && nCodesDelta > 0,
       "fabricated crash window is vacuous")
     codesDelta.write.mode("append")
-      .insertInto(Similarity.ivfPqTable(dir, "codes_v0"))
-    spark.catalog.refreshTable(Similarity.ivfPqTable(dir, "codes_v0"))
+      .insertInto(Similarity.ivfPqStore(dir).table("codes_v0"))
+    spark.catalog.refreshTable(Similarity.ivfPqStore(dir).table("codes_v0"))
     // the torn index serves: orphan codes rows are dropped by the
     // search's codes JOIN cells inner join — batch ids are ABSENT, never
     // wrong, and the base index still answers
@@ -968,7 +968,7 @@ class SimilaritySpec extends AnyFunSuite {
     // persisted (here: subs 0..4 of every new id), cells never appended
     val (_, codesDelta) = Similarity.ivfPqEncodeDelta(model, odd)
     codesDelta.filter($"sub" < 5)
-      .write.mode("append").insertInto(Similarity.ivfPqTable(dir, "codes_v0"))
+      .write.mode("append").insertInto(Similarity.ivfPqStore(dir).table("codes_v0"))
     // the re-run of the interrupted add must COMPLETE each torn id
     val viaDelta = Similarity.addToSavedIvfPq(spark, dir, odd)
     val perId = viaDelta.pq.codes.groupBy("id").count().collect()

@@ -643,7 +643,7 @@ class StreamingSpec extends AnyFunSuite {
     // delta job must attach the stored bucketed table from disk itself
     // (a day-2 job in a new JVM has no day-1 catalog)
     spark.sql("DROP TABLE IF EXISTS " +
-      CurationStream.confirmTable(dir, "eval"))
+      CurationStream.store(dir).table("eval_shingles"))
     spark.sql("DROP TABLE IF EXISTS " +
       CurationStream.seenTableName(spark, dir))
     // day 1: accept the cleaned %4==1 shard, advance the ARTIFACT
@@ -1204,7 +1204,7 @@ class StreamingSpec extends AnyFunSuite {
     val adir = java.nio.file.Files.createTempDirectory("frozen_r12").toString
     CurationStream.save(frozen, adir)
     spark.sql("DROP TABLE IF EXISTS " +
-      CurationStream.confirmTable(adir, "eval"))
+      CurationStream.store(adir).table("eval_shingles"))
     spark.sql("DROP TABLE IF EXISTS " +
       CurationStream.seenTableName(spark, adir))
     (frozen, adir, docs)
@@ -1260,6 +1260,69 @@ class StreamingSpec extends AnyFunSuite {
     val grown = Similarity.addToSavedIvfPq(spark, adir, add)
     assert(grown.cells.count() == mdl.cells.count() + add.count())
     assert(!graft.core.Fs.exists(spark, s"$adir/_delta_lock"))
+    graft.core.CacheScope.release()
+  }
+
+  test("both stores refuse a pre-marker layout (a rename-era CURRENT " +
+       "file or an unversioned meta) in every operation, naming it, and " +
+       "never read it as absent") {
+    import graft.streaming.CurationStream
+    import graft.operators.Similarity
+    val (frozen, adir, docs) = freshArtifact()
+    val emb = spark.read.parquet(s"$dir/embeddings.parquet")
+    val mdl = Similarity.ivfPqFit(emb.filter(col("vec_id") % 3 === 0),
+      nlist = 4, m = 4, k = 16, dim = 64)
+    val idir = java.nio.file.Files.createTempDirectory("ivfpq_premark")
+      .toString
+    Similarity.saveIvfPq(mdl, idir)
+    val day1 = docs.filter(col("doc_id") % 4 === 1)
+      .select(col("doc_id"),
+        graft.operators.TextAnalysis.cleanText(col("text")).as("text"))
+    val add = emb.filter(col("vec_id") % 3 === 1)
+    // (live store, its operations); the saves target a directory that
+    // holds nothing but the pre-marker layout, the case that would
+    // otherwise read as absent and publish v0 over it
+    val stores: Seq[(String, Seq[(String, String => Any)])] = Seq(
+      adir -> Seq(
+        "load" -> (d => CurationStream.load(spark, d)),
+        "save" -> (d => CurationStream.save(frozen, d)),
+        "delta" -> (d => CurationStream.saveSeenDelta(frozen, d, day1)),
+        "compaction" -> (d => CurationStream.compactSeenTable(spark, d)),
+        "bloom rebuild" -> (d => CurationStream.rebuildSeenBloom(spark, d)),
+        "vacuum" -> (d => CurationStream.vacuum(spark, d)),
+        "manifest" -> (d => CurationStream.manifest(spark, d))),
+      idir -> Seq(
+        "load" -> (d => Similarity.loadIvfPq(spark, d)),
+        "save" -> (d => Similarity.saveIvfPq(mdl, d)),
+        "delta" -> (d => Similarity.addToSavedIvfPq(spark, d, add)),
+        "compaction" -> (d => Similarity.compactIvfPq(spark, d)),
+        "vacuum" -> (d => Similarity.vacuumIvfPq(spark, d)),
+        "manifest" -> (d => Similarity.ivfPqManifest(spark, d))))
+    for ((live, ops) <- stores;
+         (entry, layout) <- Seq("CURRENT" -> "rename-era CURRENT",
+           "meta" -> "unversioned meta");
+         (name, op) <- ops) {
+      val target = if (name == "save")
+        java.nio.file.Files.createTempDirectory("premark_save").toString
+      else live
+      val p = java.nio.file.Paths.get(s"$target/$entry")
+      if (entry == "CURRENT")
+        java.nio.file.Files.write(p, "5".getBytes("UTF-8"))
+      else java.nio.file.Files.createDirectories(p)
+      val e = intercept[IllegalStateException](op(target))
+      assert(e.getMessage.contains("pre-marker") &&
+        e.getMessage.contains(layout), s"$name over $entry: ${e.getMessage}")
+      java.nio.file.Files.delete(p)
+      assert(!graft.core.Fs.exists(spark, s"$target/_delta_lock"),
+        s"$name left a lock behind")
+    }
+    // the refusals touched nothing: both stores still serve
+    val l = CurationStream.load(spark, adir)
+    assert(l.weights.count() > 0)
+    CurationStream.release(l)
+    assert(Similarity.loadIvfPq(spark, idir).cells.count() ==
+      mdl.cells.count())
+    CurationStream.release(frozen)
     graft.core.CacheScope.release()
   }
 
@@ -1333,101 +1396,6 @@ class StreamingSpec extends AnyFunSuite {
     } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
     CurationStream.release(advanced)
     CurationStream.release(loaded)
-    CurationStream.release(frozen)
-    graft.core.CacheScope.release()
-  }
-
-  test("load() reads round-11 and pre-round-11 artifact schemas " +
-       "(ADVICE r11: no field-not-found on older artifacts)") {
-    import graft.streaming.CurationStream
-    val (frozen, adir, docs) = freshArtifact()
-    val arriving = docs.filter(col("doc_id") % 2 === 1)
-    def verdicts(m: CurationStream.FrozenCuration) =
-      CurationStream.curateBatch(arriving, m).collect()
-        .map(r => (r.getLong(0), r.getLong(2), r.getLong(3)))
-        .sortBy(_._1).toSeq
-    val expect = verdicts(frozen)
-    assert(expect.nonEmpty)
-    // at this corpus size the r12 freeze picks 1 shard per filter, so
-    // dropping the shard column fabricates a faithful r11 filter
-    assert(frozen.evalShards == 1 && frozen.seenShards == 1)
-    // ---- fabricate a ROUND-11 artifact: 9-column meta, unsharded blooms
-    val m12 = spark.read
-      .parquet(CurationStream.currentMetaPath(spark, adir)).collect()(0)
-    import spark.implicits._
-    val r11dir = java.nio.file.Files.createTempDirectory("frozen_r11").toString
-    for (t <- Seq("weights", "kn3_logprobs"))
-      spark.read.parquet(s"$adir/$t").write.parquet(s"$r11dir/$t")
-    spark.read.parquet(s"$adir/eval_bloom").select("word", "bits")
-      .write.parquet(s"$r11dir/eval_bloom") // r11 filters: (word, bits)
-    spark.read.parquet(CurationStream.seenBloomPath(spark, adir))
-      .select("word", "bits").write.parquet(s"$r11dir/seen_bloom")
-    graft.core.Bucketing.writeBucketed(
-      spark.read.parquet(s"$adir/eval_shingles"),
-      CurationStream.confirmTable(r11dir, "eval"),
-      s"$r11dir/eval_shingles", "sh", 8)
-    graft.core.Bucketing.writeBucketed(
-      spark.read.parquet(CurationStream.seenTableDir(spark, adir)),
-      CurationStream.confirmTable(r11dir, "seen"),
-      s"$r11dir/seen_hashes", "h", 8)
-    Seq((m12.getAs[Int]("num_buckets"), m12.getAs[Long]("score_max_micro"),
-        m12.getAs[Double]("temperature"), m12.getAs[Long]("ce_cut_micro"),
-        m12.getAs[Int]("shingle_n"), m12.getAs[Int]("eval_bloom_bits"),
-        m12.getAs[Int]("seen_bloom_bits"), m12.getAs[Int]("bloom_hashes"),
-        8))
-      .toDF("num_buckets", "score_max_micro", "temperature", "ce_cut_micro",
-        "shingle_n", "eval_bloom_bits", "seen_bloom_bits", "bloom_hashes",
-        "confirm_buckets")
-      .coalesce(1).write.parquet(s"$r11dir/meta")
-    val l11 = CurationStream.load(spark, r11dir)
-    assert((l11.evalShards, l11.seenShards) == ((1, 1)))
-    assert((l11.evalKeys, l11.seenKeys) == ((-1L, -1L)))
-    assert(verdicts(l11) == expect)
-    // a delta against the legacy artifact works and upgrades the filter
-    val day1 = docs.filter(col("doc_id") % 4 === 1)
-      .select(col("doc_id"),
-        graft.operators.TextAnalysis.cleanText(col("text")).as("text"))
-    CurationStream.saveSeenDelta(l11, r11dir, day1)
-    assert(spark.read
-      .parquet(CurationStream.seenBloomPath(spark, r11dir)).columns
-      .contains("shard"))
-    assert(CurationStream
-      .curateBatch(day1, CurationStream.load(spark, r11dir)).count() == 0)
-    // ---- fabricate a PRE-round-11 artifact: single bloom_bits meta,
-    // PLAIN-parquet confirm tables, no catalog entries
-    val r10dir = java.nio.file.Files.createTempDirectory("frozen_r10").toString
-    for (t <- Seq("weights", "kn3_logprobs"))
-      spark.read.parquet(s"$adir/$t").write.parquet(s"$r10dir/$t")
-    spark.read.parquet(s"$adir/eval_bloom").select("word", "bits")
-      .write.parquet(s"$r10dir/eval_bloom")
-    spark.read.parquet(CurationStream.seenBloomPath(spark, adir))
-      .select("word", "bits").write.parquet(s"$r10dir/seen_bloom")
-    spark.read.parquet(s"$adir/eval_shingles")
-      .write.parquet(s"$r10dir/eval_shingles")
-    spark.read.parquet(CurationStream.seenTableDir(spark, adir))
-      .write.parquet(s"$r10dir/seen_hashes")
-    // pre-r11 froze both filters at ONE size; the r12 freeze sized them
-    // separately, so a faithful single-bloom_bits fabrication needs them
-    // equal — sf0.001's eval/seen sets both fit the 4096-bit floor only
-    // if measured so; assert instead that the FALLBACK reads bloom_bits
-    // for both, using the seen size for the fabricated artifact and
-    // re-deriving the eval filter at that size.
-    val bb = m12.getAs[Int]("seen_bloom_bits")
-    graft.operators.Sketches.bloomBuild(
-        spark.read.parquet(s"$adir/eval_shingles"), "sh", bb,
-        m12.getAs[Int]("bloom_hashes"))
-      .write.mode("overwrite").parquet(s"$r10dir/eval_bloom")
-    Seq((m12.getAs[Int]("num_buckets"), m12.getAs[Long]("score_max_micro"),
-        m12.getAs[Double]("temperature"), m12.getAs[Long]("ce_cut_micro"),
-        m12.getAs[Int]("shingle_n"), bb, m12.getAs[Int]("bloom_hashes")))
-      .toDF("num_buckets", "score_max_micro", "temperature", "ce_cut_micro",
-        "shingle_n", "bloom_bits", "bloom_hashes")
-      .coalesce(1).write.parquet(s"$r10dir/meta")
-    val l10 = CurationStream.load(spark, r10dir)
-    assert(l10.evalBloomBits == bb && l10.seenBloomBits == bb)
-    assert(verdicts(l10) == expect)
-    CurationStream.release(l11)
-    CurationStream.release(l10)
     CurationStream.release(frozen)
     graft.core.CacheScope.release()
   }
@@ -1904,7 +1872,7 @@ class StreamingSpec extends AnyFunSuite {
       // cross-attach load after the catalog entries are dropped (the
       // fresh-session path) still serves over mock:// LOCATIONs
       spark.sql("DROP TABLE IF EXISTS " +
-        CurationStream.confirmTable(adir, "eval"))
+        CurationStream.store(adir).table("eval_shingles"))
       spark.sql("DROP TABLE IF EXISTS " +
         CurationStream.seenTableName(spark, adir))
       val l1 = CurationStream.load(spark, adir)
