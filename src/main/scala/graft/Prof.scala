@@ -129,14 +129,12 @@ object Prof {
         val t = graft.core.CacheScope.persist(TextOps.ngrams(docs, 3))
         t.count(); t
       }
-      val m = time("kn3ModelFromTrigrams (5 aggs + guards)")(
-        TextRanking.kn3ModelFromTrigrams(tri))
-      val lp = time("kn3LogProbs materialize") {
-        val l = graft.core.CacheScope.persist(TextRanking.kn3LogProbs(m))
+      val lp = time("kn3LogProbs materialize (model + guard, one plan)") {
+        val l = graft.core.CacheScope.persist(TextRanking.kn3LogProbs(tri))
         l.count(); l
       }
-      noop(TextRanking.kn3ScoreTrigramsMerged(tri, lp), "score join + per-doc agg")
-      noop(TextRanking.kn3ScoreTrigramsMerged(tri, lp)
+      noop(TextRanking.kn3ScoreTrigrams(tri, lp), "score join + per-doc agg")
+      noop(TextRanking.kn3ScoreTrigrams(tri, lp)
           .orderBy("doc_id"), "score + orderBy (t_kneser_ney3 tail)")
       time("perplexityBuckets full (t_ccnet_buckets body)") {
         graft.operators.TextRanking.perplexityBuckets(docs, nBuckets = 3)

@@ -2525,8 +2525,7 @@ object Queries {
           .kn3Statistics(tri.filter(col("doc_id") % 2 === 0))
           .unionByName(
             TextRanking.kn3Statistics(tri.filter(col("doc_id") % 2 === 1)))
-        TextRanking.kn3ScoreTrigrams(tri,
-            TextRanking.kn3ModelFromTrigrams(merged))
+        TextRanking.kn3ScoreTrigrams(tri, TextRanking.kn3LogProbs(merged))
           .orderBy("doc_id")
       },
       Some(s"""WITH $ToksCte, $StreamCte, $sqlKn3Ctes

@@ -3,7 +3,8 @@ package graft.core
 import scala.collection.mutable
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.graftshim.LeafShims
 import org.apache.spark.storage.StorageLevel
 
@@ -43,8 +44,10 @@ import org.apache.spark.storage.StorageLevel
   */
 object CacheScope {
   private val tracked = mutable.ArrayBuffer.empty[DataFrame]
-  /** Leaves made by [[materialize]] that still hold their rows. */
-  private val held = mutable.HashMap.empty[DataFrame, (RDD[_], Long)]
+  /** Leaves made by [[materialize]] that still hold their rows, with the
+    * measured row count of each stored partition. */
+  private val held =
+    mutable.HashMap.empty[DataFrame, (RDD[InternalRow], Array[Long])]
 
   /** Persist `df` and track it for the next [[release]]. */
   def persist(df: DataFrame): DataFrame = synchronized {
@@ -59,9 +62,10 @@ object CacheScope {
     * freed by the next [[release]]; untracked ones (frozen-model
     * artifacts, which must outlive per-batch releases) only by [[free]]. */
   def materialize(df: DataFrame, tracked: Boolean = true): DataFrame = {
-    val (leaf, rdd, rows) = LeafShims.materialize(df, StorageLevel.MEMORY_AND_DISK)
+    val (leaf, rdd, counts) =
+      LeafShims.materialize(df, StorageLevel.MEMORY_AND_DISK)
     synchronized {
-      held(leaf) = (rdd, rows)
+      held(leaf) = (rdd, counts)
       if (tracked) this.tracked += leaf
     }
     leaf
@@ -70,7 +74,20 @@ object CacheScope {
   /** Row count of `df`: measured at materialization for a held leaf of
     * [[materialize]], otherwise a `count()` job. */
   def rowCount(df: DataFrame): Long =
-    synchronized(held.get(df)).map(_._2).getOrElse(df.count())
+    synchronized(held.get(df)).map(_._2.sum).getOrElse(df.count())
+
+  /** Row `k` (0-based) of a held leaf of [[materialize]] in stored order,
+    * partition after partition — for a leaf of a global sort, the row at
+    * rank `k`. The measured partition counts locate it, and one job over
+    * that one partition reads it; `None` when the leaf has at most `k`
+    * rows. */
+  def rowAt(df: DataFrame, k: Long): Option[Row] = {
+    val (rdd, counts) = synchronized(held.get(df)).getOrElse(
+      throw new IllegalArgumentException("rowAt needs a held materialized leaf"))
+    val starts = counts.scanLeft(0L)(_ + _)
+    counts.indices.find(p => k >= starts(p) && k < starts(p + 1))
+      .map(p => LeafShims.rowAt(rdd, df.schema, p, k - starts(p)))
+  }
 
   /** Free one table kept by [[materialize]] or `persist()` (non-blocking).
     * A frame that holds nothing is left as it is. */

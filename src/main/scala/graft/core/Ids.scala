@@ -95,14 +95,9 @@ object Ids {
     * silently serve the stale cache — the staleness trap CorpusSpec
     * caught when this operator briefly persisted without a salt. The
     * epoch makes every invocation's plan unique: within the call both
-    * branches share the cache, across calls nothing ever matches.
-    *
-    * `pin` keeps the ranged table: a CacheScope-tracked persist by
-    * default; a caller that owns its tables' lifetime passes its own (the
-    * curation freeze materializes it and frees it). */
+    * branches share the cache, across calls nothing ever matches. */
   def denseRankBy(df: DataFrame, sortExprs: Seq[org.apache.spark.sql.Column],
-                  idName: String,
-                  pin: DataFrame => DataFrame = CacheScope.persist): DataFrame = {
+                  idName: String): DataFrame = {
     val pid = "__graft_rank_pid"
     val off = "__graft_rank_off"
     val cnt = "__graft_rank_cnt"
@@ -116,7 +111,7 @@ object Ids {
     // neither dense nor stable — SURVEY §1.5 — but split into its two
     // fields over range-partitioned sorted data it is deterministic: the
     // global rank offsets[pid] + local below is.)
-    val ranged = pin(
+    val ranged = CacheScope.persist(
       df.repartitionByRange(
           df.sparkSession.sessionState.conf.numShufflePartitions, sortExprs: _*)
         .sortWithinPartitions(sortExprs: _*)

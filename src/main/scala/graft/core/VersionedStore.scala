@@ -1,6 +1,7 @@
 package graft.core
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** The one on-disk layout of a saved, versioned artifact directory. The
   * frozen-curation artifact and the IVF-PQ index both live in it; each
@@ -60,25 +61,23 @@ final case class VersionedStore(kind: String, dir: String,
     Fs.readPointer(spark, dir).getOrElse(-1L)
   }
 
-  /** The one-row meta of version `v`. */
-  def meta(spark: SparkSession, v: Long): DataFrame =
-    spark.read.parquet(metaPath(v))
-
-  /** The one-row meta of the current version. */
+  /** The one-row meta of the current version. A store operation reads
+    * it once, at its start, and hands the row (or the scalars parsed from
+    * it) down: each read is a schema-inference job plus a scan. */
   def current(spark: SparkSession): DataFrame = {
     val v = version(spark)
     require(v >= 0, s"no saved artifact at $dir")
-    meta(spark, v)
+    spark.read.parquet(metaPath(v))
   }
 
-  def writeMeta(meta: DataFrame, v: Long): Unit =
+  /** Write `meta` (one row) as the meta of version `v`, publish `v`
+    * (every `_v<v>` file is fully written), then prune what no reader can
+    * need. The caller's row serves the prune, so a publish reads back
+    * only the older retained metas. */
+  def publish(spark: SparkSession, v: Long, meta: DataFrame): Unit = {
     meta.coalesce(1).write.mode("overwrite").parquet(metaPath(v))
-
-  /** Publish version `v` (every `_v<v>` file is fully written), then
-    * prune what no reader can need. */
-  def publish(spark: SparkSession, v: Long): Unit = {
     Fs.writePointer(spark, dir, v)
-    prune(spark, v)
+    prune(spark, v, meta.head())
   }
 
   /** The save-side guard: an atomic-create store, no pre-marker layout,
@@ -170,7 +169,7 @@ final case class VersionedStore(kind: String, dir: String,
     locked(spark, "re-run the vacuum (it only deletes non-current state)",
         leaseMs) {
       val cur = version(spark)
-      val live = meta(spark, cur).head()
+      val live = current(spark).head()
       val stats = deleteGenerations(spark) {
         case ("meta", v) => v != cur
         case (family, v) => v != live.getAs[Long](families.toMap.apply(family))
@@ -187,12 +186,15 @@ final case class VersionedStore(kind: String, dir: String,
     * one delta call can publish twice (the delta and its
     * auto-compaction), and a window of one would let that single call
     * delete the state a reader resolved just before it. */
-  private def prune(spark: SparkSession, cur: Long): Unit = {
-    val keep = keepCol.fold(2L)(c =>
-      math.max(2, meta(spark, cur).head().getAs[Int](c)).toLong)
-    val retained = (cur - keep to cur)
-      .filter(v => v >= 0 && Fs.exists(spark, metaPath(v)))
-      .map(meta(spark, _).head())
+  private def prune(spark: SparkSession, cur: Long, curMeta: Row): Unit = {
+    val keep = keepCol.fold(2L)(c => math.max(2, curMeta.getAs[Int](c)).toLong)
+    // the older retained metas in ONE read, schema from the current row
+    // (same writer, so no per-directory schema inference)
+    val familyCols = StructType(families.map(_._2).distinct.map(curMeta.schema(_)))
+    val older = (cur - keep until cur)
+      .filter(v => v >= 0 && Fs.exists(spark, metaPath(v))).map(metaPath)
+    val retained = curMeta +: (if (older.isEmpty) Nil
+      else spark.read.schema(familyCols).parquet(older: _*).collect().toSeq)
     deleteGenerations(spark) {
       case ("meta", v) => v < cur - keep
       case (family, v) =>

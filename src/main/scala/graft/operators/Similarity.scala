@@ -933,13 +933,14 @@ object Similarity {
       r.getAs[Long]("deltas"), r.getAs[Long]("files"))
   }
 
-  /** Write meta at version `v` (published by the caller — the live meta
-    * is never overwritten in place). */
-  private def writeIvfPqMeta(spark: org.apache.spark.sql.SparkSession,
+  /** Publish version `v` under the meta `m`, written to the version-`v`
+    * path — the live meta is never overwritten in place. */
+  private def publishIvfPq(spark: org.apache.spark.sql.SparkSession,
       dir: String, m: IvfPqMeta, v: Long): Unit = {
     import spark.implicits._
-    ivfPqStore(dir).writeMeta(Seq((m.buckets, m.tableV, m.deltas, m.files))
-      .toDF("buckets", "table_v", "deltas", "files"), v)
+    ivfPqStore(dir).publish(spark, v,
+      Seq((m.buckets, m.tableV, m.deltas, m.files))
+        .toDF("buckets", "table_v", "deltas", "files"))
   }
 
   /** Index-hygiene MANIFEST (VERDICT r14 #8): one queryable row of the
@@ -971,15 +972,14 @@ object Similarity {
 
   /** Publish version `v` of a fully written `cells_v<v>`/`codes_v<v>`
     * pair under a fresh meta (`deltas` = 0) — the end of both
-    * [[saveIvfPq]] and the compaction. Returns the pair's file count. */
+    * [[saveIvfPq]] and the compaction. Returns the published meta. */
   private def publishFullWrite(spark: org.apache.spark.sql.SparkSession,
-      dir: String, buckets: Int, v: Long): Long = {
+      dir: String, buckets: Int, v: Long): IvfPqMeta = {
     val s = ivfPqStore(dir)
-    val files = s.files(spark, s"cells_v$v") + s.files(spark, s"codes_v$v")
-    writeIvfPqMeta(spark, dir, IvfPqMeta(buckets, tableV = v, deltas = 0L,
-      files = files), v)
-    s.publish(spark, v)
-    files
+    val m = IvfPqMeta(buckets, tableV = v, deltas = 0L,
+      files = s.files(spark, s"cells_v$v") + s.files(spark, s"codes_v$v"))
+    publishIvfPq(spark, dir, m, v)
+    m
   }
 
   /** Persist a fitted IVF-PQ index to `dir` as four parquet tables —
@@ -1049,8 +1049,12 @@ object Similarity {
     * BUCKETED catalog scans (attached via DDL in a fresh session), kept
     * lazy until a search touches them. */
   def loadIvfPq(spark: org.apache.spark.sql.SparkSession,
-                dir: String): IvfPq.Model = {
-    val m = readIvfPqMeta(spark, dir)
+                dir: String): IvfPq.Model =
+    loadIvfPq(spark, dir, readIvfPqMeta(spark, dir))
+
+  /** [[loadIvfPq]] under the already-read live meta `m`. */
+  private def loadIvfPq(spark: org.apache.spark.sql.SparkSession,
+                        dir: String, m: IvfPqMeta): IvfPq.Model = {
     val s = ivfPqStore(dir)
     val centroids = spark.read.parquet(s.path("centroids"))
       .collect()
@@ -1060,6 +1064,15 @@ object Similarity {
       .collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
       .sortBy(t => (t._1, t._2)).toSeq
+    attachIvfPq(spark, dir, m, centroids, codebooks)
+  }
+
+  /** The index over generation `m.tableV`'s bucketed tables (attached, or
+    * refreshed when already attached) and the given geometry. */
+  private def attachIvfPq(spark: org.apache.spark.sql.SparkSession,
+                          dir: String, m: IvfPqMeta,
+                          centroids: Seq[(Int, Array[Double])],
+                          codebooks: Seq[(Int, Int, Array[Double])]): IvfPq.Model = {
     if (m.deltas > graft.core.VersionedStore.FragmentationWarnDeltas)
       System.err.println(s"[loadIvfPq] index at $dir has ${m.deltas} " +
         "bucket-appended deltas since its last full write: listing/" +
@@ -1308,7 +1321,8 @@ object Similarity {
     val s = ivfPqStore(dir)
     s.locked(ss, "re-run the interrupted add (the encode-append is " +
         "idempotent)", leaseMs) {
-      val model = loadIvfPq(ss, dir) // attaches bucketed tables if needed
+      val m = readIvfPqMeta(ss, dir)
+      val model = loadIvfPq(ss, dir, m) // attaches bucketed tables if needed
       val (cellsDelta, codesDelta) =
         ivfPqEncodeDelta(model, newVectors, idCol = idCol, vecCol = vecCol)
       // localCheckpoint, not a persist or a materialize leaf: both deltas'
@@ -1317,7 +1331,6 @@ object Similarity {
       val cd = cellsDelta.localCheckpoint(true)
       val kd = codesDelta.localCheckpoint(true)
       if (cd.count() > 0) {
-        val m = readIvfPqMeta(ss, dir)
         // bucket-encoded append: the grown table keeps its co-located
         // join property (each delta adds per-bucket files, no rewrite).
         // CRASH ORDERING between the two appends: codes FIRST, each
@@ -1349,12 +1362,15 @@ object Similarity {
         // once the append count crosses the threshold — amortized:
         // one rewrite per compactEvery batch-sized deltas
         val next = s.version(ss) + 1
-        writeIvfPqMeta(ss, dir, m.copy(deltas = m.deltas + 1L), next)
-        s.publish(ss, next)
-        if (compactEvery > 0 && m.deltas + 1L >= compactEvery)
-          compactIvfPq0(ss, dir)
-      }
-      loadIvfPq(ss, dir)
+        val grown = m.copy(deltas = m.deltas + 1L)
+        publishIvfPq(ss, dir, grown, next)
+        val live =
+          if (compactEvery > 0 && grown.deltas >= compactEvery)
+            compactIvfPq0(ss, dir, grown)
+          else grown
+        // re-attach: the appends (or the compaction) changed the tables
+        attachIvfPq(ss, dir, live, model.centroids, model.pq.codebooks)
+      } else model
     }
   }
 
@@ -1370,21 +1386,23 @@ object Similarity {
     ivfPqStore(dir).locked(spark, "re-run the interrupted compaction (the " +
         "old tables are still the published ones until the pointer flips)",
         leaseMs) {
-      compactIvfPq0(spark, dir)
+      compactIvfPq0(spark, dir, readIvfPqMeta(spark, dir))
     }
 
+  /** Compaction body over the live meta `m` — callers hold the delta
+    * lock. Returns the published meta. */
   private def compactIvfPq0(spark: org.apache.spark.sql.SparkSession,
-                            dir: String): Unit = {
-    val m = readIvfPqMeta(spark, dir)
+                            dir: String, m: IvfPqMeta): IvfPqMeta = {
     val s = ivfPqStore(dir)
     val next = s.version(spark) + 1
     for (t <- Seq("cells", "codes")) {
       attachIvfPqTable(spark, dir, s"${t}_v${m.tableV}", m.buckets)
       s.rewrite(spark, s"${t}_v${m.tableV}", s"${t}_v$next", "id", m.buckets)
     }
-    val files = publishFullWrite(spark, dir, m.buckets, next)
+    val published = publishFullWrite(spark, dir, m.buckets, next)
     System.err.println(s"[compactIvfPq] $dir compacted to version $next " +
-      s"($files files, ${m.buckets} buckets)")
+      s"(${published.files} files, ${m.buckets} buckets)")
+    published
   }
 
   /** Search: each query coarse-assigns to its nearest cell, residualizes

@@ -76,14 +76,27 @@ object TextOps {
     * share (persist) the token arrays instead of re-running the tokenizer
     * regex per order. */
   def ngramsFromTokens(toksDf: DataFrame, n: Int, idCol: String = "doc_id",
-                       toksCol: String = "toks"): DataFrame = {
+                       toksCol: String = "toks"): DataFrame =
+    ngramRows(toksDf, n, idCol, toksCol)
+      .groupBy(col(idCol) +: (0 until n).map(i => col(s"w$i")): _*)
+      .agg(count(lit(1)).as("count"))
+
+  /** [[ngrams]] before its per-document aggregate: one row per n-gram
+    * OCCURRENCE, (docId, w0..w{n-1}, count = 1). A map-only pass (no
+    * shuffle) for consumers that sum the counts again anyway — every sum
+    * over it equals the same sum over [[ngrams]]. */
+  def ngramOccurrences(docs: DataFrame, n: Int, idCol: String = "doc_id",
+                       textCol: String = "text"): DataFrame =
+    ngramRows(docs.select(col(idCol), tokens(col(textCol)).as("toks")),
+      n, idCol, "toks").withColumn("count", lit(1L))
+
+  private def ngramRows(toksDf: DataFrame, n: Int, idCol: String,
+                        toksCol: String): DataFrame = {
     require(n >= 1, s"ngram order must be >= 1, got $n")
     val wordCols = (0 until n).map(i => col("ng").getItem(i).as(s"w$i"))
     toksDf.select(col(idCol), col(s"`$toksCol`").as("toks"))
       .select(col(idCol), explode(ngramArrays(col("toks"), n)).as("ng"))
       .select(col(idCol) +: wordCols: _*)
-      .groupBy(col(idCol) +: (0 until n).map(i => col(s"w$i")): _*)
-      .agg(count(lit(1)).as("count"))
   }
 
   /** unigrams: (docId, token, count) (A3, document.py:82-92). */

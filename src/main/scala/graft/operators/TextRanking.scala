@@ -297,147 +297,136 @@ object TextRanking {
     * engines), ONE ln per row rounded to micro-nats before any
     * aggregation — the [[bigramCrossEntropy]] contract.
     *
-    * Plan shape: corpus trigram aggregate; three context aggregates over
-    * the TRIGRAM-TYPE table (not corpus-sized); one scalar count; the
-    * per-doc trigram table hash-joins the model tables (pair/triple
-    * tables are vocab²-ish — no broadcast hints, the planner broadcasts
-    * what fits) + one final per-doc aggregate. Documents with < 3 tokens
+    * Plan shape: ONE lazy plan with no driver action — [[kn3LogProbs]]
+    * (the trigram-TYPE aggregate, its context aggregates and a one-row
+    * guard, none corpus-sized) collapsed to a log-prob table, then
+    * [[kn3ScoreTrigrams]] (the per-doc trigram table joins it once + one
+    * per-doc aggregate). Pair/triple tables are vocab²-ish — no broadcast
+    * hints, the planner broadcasts what fits. Documents with < 3 tokens
     * have no trigrams and are absent. */
   def trigramKneserNeyCrossEntropy(docs: DataFrame, idCol: String = "doc_id",
                                    textCol: String = "text"): DataFrame = {
     val tri = graft.core.CacheScope.persist(
       TextOps.ngrams(docs, 3, idCol, textCol))
-    kn3ScoreTrigrams(tri, kn3ModelFromTrigrams(tri), idCol)
+    kn3ScoreTrigrams(tri, kn3LogProbs(tri), idCol)
   }
 
-  /** A FROZEN trigram-KN model: the five count tables + the scalar B.
-    * Persisted on construction (each table feeds multiple scoring joins);
-    * tables are n-gram-TYPE-sized, never corpus-sized. */
-  final case class Kn3Model(triTot: DataFrame, s01: DataFrame,
-                            cont: DataFrame, mid: DataFrame, nl: DataFrame,
-                            b: Long)
-
-  /** Train the trigram-KN model from a per-doc trigram table (the
-    * [[TextOps.ngrams]] output) — split from scoring so the model can be
-    * FROZEN once on a reference corpus and applied to arriving batches
-    * ([[kn3CrossEntropy]]), the deployment shape of a streaming curation
-    * pipeline. Includes the enforced int64 headroom guard. */
   /** KN3's SUFFICIENT STATISTICS for one corpus shard: trigram TYPE
     * counts `(w0, w1, w2, count)` — the table every model quantity
     * derives from (s01/cont/mid/nl are all aggregates of it). Counts are
     * ADDITIVE, so statistics of disjoint shards merge by plain union:
-    * [[kn3ModelFromTrigrams]] re-aggregates per type, making a model
-    * built on unioned shard statistics value-identical to one built on
-    * the whole corpus in one pass. This is the incremental-maintenance
-    * shape for a sharded 100 TB corpus — per-shard type tables (n-gram-
-    * TYPE-sized, not corpus-sized) are the only thing shipped or kept;
+    * [[kn3LogProbs]] re-aggregates per type, making a model built on
+    * unioned shard statistics value-identical to one built on the whole
+    * corpus in one pass. This is the incremental-maintenance shape for a
+    * sharded 100 TB corpus — per-shard type tables (n-gram-TYPE-sized,
+    * not corpus-sized) are the only thing shipped or kept;
     * `t_kn3_incremental` proves the equality against the monolithic
     * oracle. */
   def kn3Statistics(tri: DataFrame): DataFrame =
     tri.groupBy("w0", "w1", "w2").agg(sum("count").as("count"))
 
-  def kn3ModelFromTrigrams(tri: DataFrame,
-                           keep: Seq[DataFrame] => Seq[DataFrame] =
-                             _.map(graft.core.CacheScope.persist)): Kn3Model = {
-    // `keep` holds the five tables, handed over in dependency order as
-    // [triTot], [s01, cont], [mid, nl] — each group reads only tables kept
-    // before it. By default each is a CacheScope-tracked lazy persist; a
-    // caller that owns the tables' lifetime (the curation freeze)
-    // materializes each group's tables side by side and frees them itself.
-    val Seq(triTot) = keep(Seq(
-      tri.groupBy("w0", "w1", "w2").agg(sum("count").as("ctri"))))
-    val Seq(s01, cont) = keep(Seq(
-      triTot.groupBy("w0", "w1")
-        .agg(sum("ctri").as("s01"), count(lit(1)).as("n1r01")),
-      triTot.groupBy("w1", "w2").agg(count(lit(1)).as("ncont"))))
-    val Seq(mid, nl) = keep(Seq(
-      cont.groupBy("w1").agg(sum("ncont").as("nmid"), count(lit(1)).as("n1rc")),
-      cont.groupBy("w2").agg(count(lit(1)).as("nl"))))
-    // ENFORCED overflow guard (the scaladoc bound, made a runtime failure
-    // instead of silent non-ANSI wraparound): every num/den term is bounded
-    // by 37·s01·nmid·b (num: 16 + 21 from the two addends with ncont,
-    // n1rc <= nmid, nl <= b, n1r01 <= s01), so checking the MAXES of the
-    // two model columns once — two tiny aggregates over the persisted
-    // vocab²-sized model tables, not the corpus — proves every per-row
-    // int64 product is in range. 40 leaves slack over the exact 37.
-    // max() over an EMPTY model table (degenerate corpus: no trigrams) is
-    // NULL — no rows means no products to overflow, so treat as 0.
-    // The three scalars (B = |cont|, max s01, max nmid) land in ONE action
-    // (round 17, guide §1.2): they were three sequential driver round
-    // trips, each a full job whose fixed scheduling cost dwarfed its
-    // one-row result; the 1-row cross joins are broadcast by construction
-    // and the single job materializes tri -> triTot -> {s01, cont, mid}
-    // into their persisted form exactly as the separate actions did.
-    val guards = s01.agg(max("s01").as("max_s01"))
-      .crossJoin(broadcast(mid.agg(max("nmid").as("max_nmid"))))
-      .crossJoin(broadcast(cont.agg(count(lit(1)).as("b"))))
-      .head()
-    val maxS01 = Option(guards.get(0)).map(_.asInstanceOf[Long]).getOrElse(0L)
-    val maxNmid = Option(guards.get(1)).map(_.asInstanceOf[Long]).getOrElse(0L)
-    val b = guards.getLong(2) // one scalar: distinct (w1,w2) in trigram support
-    require(BigInt(40) * maxS01 * maxNmid * b <= BigInt(Long.MaxValue),
-      s"trigram-KN int64 headroom exceeded (max s01=$maxS01, max nmid=" +
-        s"$maxNmid, B=$b): shard the model by w1 and renormalize")
-    Kn3Model(triTot, s01, cont, mid, nl, b)
-  }
-
-  /** Score a per-doc trigram table under a frozen [[Kn3Model]]. Trigrams
-    * ABSENT from the model (possible when scoring a batch the model was
-    * not trained on) are skipped — the inner model joins drop them, so an
-    * out-of-support trigram contributes nothing rather than a fabricated
-    * probability; n_trigrams counts only the scored ones.
+  /** Train the trigram-KN model from a trigram count table (the per-doc
+    * [[TextOps.ngrams]] output, or unioned [[kn3Statistics]]) and return
+    * it in its SCORING form: ONE (w0, w1, w2, lp_scaled) table, the
+    * per-trigram micro-nat log-prob of [[trigramKneserNeyCrossEntropy]]'s
+    * formula. Trigram-TYPE-sized; this is the table a frozen deployment
+    * keeps and ships ([[graft.streaming.CurationStream]] freezes exactly
+    * this), and [[kn3ScoreTrigrams]] joins a corpus side against it, so
+    * per-batch work never re-derives the model.
     *
-    * Join shape: the five model tables are first merged into ONE
-    * (w0,w1,w2)-keyed log-prob table — a join chain among
-    * trigram-TYPE-sized tables — and the corpus-sized per-doc table joins
-    * it ONCE. The naive alternative (per-doc table joining each model
-    * table directly) shuffles the BIG side five times on five different
-    * keys (w0w1w2, w0w1, w1, w1w2, w2); this shape shuffles it once.
-    * At sf0.1 the merge measures ~1 s SLOWER (the per-doc table is only
-    * ~260k rows there — the same order as the type tables — so the
-    * model-side reshuffles cost more than the saved doc-side shuffles),
-    * but the two sides scale differently: trigram TYPES plateau with
-    * Heaps' law while per-doc instances grow linearly with the corpus,
-    * so at production scale the merged shape wins by the ratio of
-    * instances to types. Chosen for the 100 TB design point. Every
-    * model join is inner on keys that exist by construction (each model
-    * row derives from triTot), so results are identical. */
-  def kn3ScoreTrigrams(tri: DataFrame, m: Kn3Model,
-                       idCol: String = "doc_id"): DataFrame =
-    kn3ScoreTrigramsMerged(tri, kn3LogProbs(m), idCol)
-
-  /** The model COLLAPSED to its scoring form: ONE (w0, w1, w2,
-    * lp_scaled) table, the five type-sized tables joined and the per-
-    * trigram micro-nat log-prob precomputed. This is the table a frozen
-    * deployment should persist and ship: [[kn3ScoreTrigramsMerged]] then
-    * joins the corpus side against it directly, and per-batch work never
-    * re-derives the model join chain ([[graft.streaming.CurationStream]]
-    * freezes exactly this). Trigram-TYPE-sized, like every model
-    * table. */
-  def kn3LogProbs(m: Kn3Model): DataFrame = {
+    * Plan shape: the trigram-type aggregate triTot is the HUB and the only
+    * table kept, by `hub` — a CacheScope-tracked lazy persist by default;
+    * the curation freeze passes a materializing keeper, so the log-prob
+    * table is then ONE materialization over a leaf. Everything else is
+    * derived from the hub inside this one plan, with no driver action:
+    * s01 and cont (aggregates of triTot), mid and nl (aggregates of
+    * cont), and a one-row broadcast guard table carrying B = |cont|
+    * (distinct (w1,w2), summed as Σ n1rc) and the maxima of s01 and nmid.
+    * The sibling aggregates are independent shuffle stages that adaptive
+    * execution submits together, and each is computed once: an aggregate
+    * read twice reuses its exchange when both reads plan it identically,
+    * which is why the hub drops null words (trigram words are tokens,
+    * never null; stated, it spares each join reader an inferred null
+    * filter of its own) and why every reader of a factor table reads all
+    * of its columns. Every join is inner on keys that exist by
+    * construction (each model row derives from triTot).
+    *
+    * ENFORCED int64 headroom guard (the scaladoc bound, made a runtime
+    * failure instead of silent wraparound): every num/den term is bounded
+    * by 37·s01·nmid·B (num: 16 + 21 from the two addends with ncont,
+    * n1rc <= nmid, nl <= B, n1r01 <= s01), so the two column maxima prove
+    * every per-row int64 product is in range; 40 leaves slack over the
+    * exact 37. The check is exact integer arithmetic on the guard row
+    * (40·a·b·c <= M  ⟺  a <= ⌊⌊⌊M/40⌋/b⌋/c⌋ for positive b, c), and a
+    * failed check raises "trigram-KN int64 headroom exceeded (...)" from
+    * the job that computes the table, in place of any product. An empty
+    * model has no rows and nothing to overflow. */
+  def kn3LogProbs(tri: DataFrame,
+                  hub: DataFrame => DataFrame = graft.core.CacheScope.persist)
+      : DataFrame = {
+    val triTot = hub(
+      tri.filter(col("w0").isNotNull && col("w1").isNotNull &&
+          col("w2").isNotNull)
+        .groupBy("w0", "w1", "w2").agg(sum("count").as("ctri")))
+    val s01 = triTot.groupBy("w0", "w1")
+      .agg(sum("ctri").as("s01"), count(lit(1)).as("n1r01"))
+    val cont = triTot.groupBy("w1", "w2").agg(count(lit(1)).as("ncont"))
+    val mid = cont.groupBy("w1")
+      .agg(sum("ncont").as("nmid"), count(lit(1)).as("n1rc"))
+    val nl = cont.groupBy("w2")
+      .agg(count(when(col("ncont") >= 1, true)).as("nl"))
+    // Every factor table is read with ALL its columns (each cont row has
+    // ncont >= 1, so nl counts w2's cont rows; B = Σ n1rc = |cont|;
+    // n1r01 <= s01), so column pruning leaves one plan per table and each
+    // aggregate's shuffle is computed once and reused by all its readers.
+    val guard = s01.agg(greatest(max("s01"), max("n1r01")).as("__max_s01"))
+      .crossJoin(broadcast(mid.agg(max("nmid").as("__max_nmid"),
+        sum("n1rc").as("__b"))))
+    val b = col("__b")
     val num = greatest(lit(4L) * col("ctri") - lit(3L), lit(0L)) *
-        (lit(4L) * col("nmid") * lit(m.b)) +
+        (lit(4L) * col("nmid") * b) +
       lit(3L) * col("n1r01") *
-        (greatest(lit(4L) * col("ncont") - lit(3L), lit(0L)) * lit(m.b) +
+        (greatest(lit(4L) * col("ncont") - lit(3L), lit(0L)) * b +
           lit(3L) * col("n1rc") * col("nl"))
-    val den = lit(16L) * col("s01") * col("nmid") * lit(m.b)
-    m.triTot
-      .join(m.s01, Seq("w0", "w1"))
-      .join(m.mid, Seq("w1"))
-      .join(m.cont, Seq("w1", "w2"))
-      .join(m.nl, Seq("w2"))
+    val den = lit(16L) * col("s01") * col("nmid") * b
+    val headroom =
+      expr(s"__max_s01 <= ((${Long.MaxValue / 40}L div __b) div __max_nmid)")
+    val overflow = raise_error(concat(
+      lit("trigram-KN int64 headroom exceeded (max s01="),
+      col("__max_s01").cast("string"), lit(", max nmid="),
+      col("__max_nmid").cast("string"), lit(", B="), b.cast("string"),
+      lit("): shard the model by w1 and renormalize")))
+    triTot
+      .join(s01, Seq("w0", "w1"))
+      .join(mid, Seq("w1"))
+      .join(cont, Seq("w1", "w2"))
+      .join(nl, Seq("w2"))
+      .crossJoin(broadcast(guard))
       .select(col("w0"), col("w1"), col("w2"),
-        round(log(num.cast("double") / den.cast("double")) * 1e6, 0)
-          .cast("long").as("lp_scaled"))
+        when(headroom,
+          round(log(num.cast("double") / den.cast("double")) * 1e6, 0)
+            .cast("long"))
+          .otherwise(overflow).as("lp_scaled"))
   }
 
-  /** Score a per-doc trigram table against a precomputed [[kn3LogProbs]]
-    * table — the per-batch half of the split: one equi-join of the
-    * corpus side against the type-sized log-prob table + one per-doc
-    * aggregate. Out-of-support trigrams drop via the inner join, exactly
-    * as [[kn3ScoreTrigrams]] documents. */
-  def kn3ScoreTrigramsMerged(tri: DataFrame, logProbs: DataFrame,
-                             idCol: String = "doc_id"): DataFrame =
+  /** Score a per-doc trigram table against a [[kn3LogProbs]] table — one
+    * equi-join of the corpus side against the type-sized log-prob table +
+    * one per-doc aggregate. Trigrams ABSENT from the model (possible when
+    * scoring a batch the model was not trained on) drop via the inner join,
+    * so an out-of-support trigram contributes nothing rather than a
+    * fabricated probability; n_trigrams counts only the scored ones.
+    *
+    * Join shape: the model is already ONE (w0,w1,w2)-keyed table, so the
+    * corpus-sized side is shuffled once. The alternative (the per-doc
+    * table joining each factor table directly) shuffles the BIG side five
+    * times on five different keys (w0w1w2, w0w1, w1, w1w2, w2). At sf0.1
+    * the merged shape measured ~1 s SLOWER (the per-doc table is only
+    * ~260k rows there — the same order as the type tables), but trigram
+    * TYPES plateau with Heaps' law while per-doc instances grow linearly
+    * with the corpus, so at production scale it wins by the ratio of
+    * instances to types. Chosen for the 100 TB design point. */
+  def kn3ScoreTrigrams(tri: DataFrame, logProbs: DataFrame,
+                       idCol: String = "doc_id"): DataFrame =
     // UNHINTED on purpose (VERDICT r14 #7): the log-prob table is
     // trigram-TYPE-sized — it grows with the corpus, and at production
     // vocab it is legitimately beyond broadcast; the planner broadcasts
@@ -450,13 +439,6 @@ object TextRanking {
       .select(col(idCol), col("n_trigrams"),
         (-round(col("s").cast("double") / col("n_trigrams"), 0).cast("long")
           / 1e6).as("cross_entropy"))
-
-  /** [[kn3ScoreTrigrams]] from raw documents: tokenize the batch, score
-    * under the frozen model. */
-  def kn3CrossEntropy(docs: DataFrame, m: Kn3Model,
-                      idCol: String = "doc_id",
-                      textCol: String = "text"): DataFrame =
-    kn3ScoreTrigrams(TextOps.ngrams(docs, 3, idCol, textCol), m, idCol)
 
   /** CCNet-style PERPLEXITY BUCKETS: rank every document by LM
     * cross-entropy (here the trigram-KN signal) and cut the corpus into

@@ -109,7 +109,7 @@ object CurationStream {
              bloomBits: Int = -1, bloomHashes: Int = 5,
              bitsPerKey: Int = 10, maxBloomBits: Int = 1 << 27,
              idCol: String = "doc_id", textCol: String = "text"): FrozenCuration = {
-    // LINEAGE RULE: every table the freeze builds is materialized ONCE as
+    // LINEAGE RULE: every table the freeze keeps is materialized ONCE as
     // a leaf plan over its stored rows ([[CacheScope.materialize]]), and
     // every later table is built on those leaves. A plain persist() keeps
     // its whole source plan inside the consumer's plan, so each artifact
@@ -122,9 +122,13 @@ object CurationStream {
     //    owner's per-batch CacheScope.release() leaves them cached; freed
     //    by [[release]], or here when the freeze fails;
     //  - `local`: the freeze's own intermediates (cleaned text, DSIR
-    //    features, trigram table, the five KN3 factor tables, the ranked
-    //    reference cross-entropies), freed before freeze returns or
-    //    throws.
+    //    features, trigram table, the KN3 trigram-type hub), freed before
+    //    freeze returns or throws; the sorted reference cross-entropies
+    //    behind the cut are freed by [[frozenCut]] itself.
+    // The KN3 branch keeps only what several jobs read: the trigram table
+    // and its type hub. Its factor tables, B and the headroom guard live
+    // inside the log-prob table's one materialization — each extra kept
+    // table was one more serial job on the freeze's critical branch.
     // Nothing the freeze builds stays in the session's CacheScope.
     val locals = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
     val artifacts =
@@ -134,11 +138,6 @@ object CurationStream {
       locals.add(m)
       m
     }
-    // independent tables materialized side by side ([[Stages]]: every one
-    // settles, and so is registered for freeing, before a failure
-    // propagates)
-    def localAll(dfs: Seq[DataFrame]): Seq[DataFrame] =
-      Stages.join(dfs.map(df => Stages.fork(local(df))))
     def artifact(df: DataFrame): DataFrame = {
       val m = CacheScope.materialize(df, tracked = false)
       artifacts.add(m)
@@ -231,47 +230,27 @@ object CurationStream {
         (seen, seenN, seenShards, seenBits, seenBloom)
       } }
       val kn3Branch = Stages.fork { walled("kn3") {
-        // the reference trigram table is consumed TWICE — the model
-        // build's first aggregate (triTot) and the full-corpus scoring
-        // pass that selects the perplexity cutoff
+        // the reference trigram occurrences are consumed TWICE — the
+        // model's trigram-type hub and the full-corpus scoring pass that
+        // selects the perplexity cutoff. Both only SUM the counts, so the
+        // table is the occurrences themselves (count = 1): a map-only
+        // job, since a per-doc aggregate would add a shuffle to this
+        // branch's critical path and change no sum.
         val refTri = local(graft.operators.TextOps
-          .ngrams(cleaned, 3, idCol, textCol))
-        val kn3 = TextRanking.kn3ModelFromTrigrams(refTri, keep = localAll)
+          .ngramOccurrences(cleaned, 3, idCol, textCol))
         // The frozen LM artifact is the model COLLAPSED to its scoring
-        // form: one (w0,w1,w2,lp_scaled) table. Per-batch scoring joins
-        // the arriving side against this single table — the five-table
-        // model join chain runs at freeze time only, never per batch.
-        val kn3Lp = artifact(TextRanking.kn3LogProbs(kn3))
-        // frozen cutoff: the cross-entropy of the LAST KEPT reference doc
-        // at the head+middle / tail boundary (rank 2n/3 - 1 in the
-        // deterministic (ce, id) total order); curateBatch keeps
-        // ce <= cut, so boundary TIES are kept (boundary-inclusive).
-        // micro grid via round(), not a truncating cast. The rank table
-        // below is the reference cross-entropies' only consumer, so they
-        // are computed inside its materialization, not stored apart.
-        val ce = TextRanking.kn3ScoreTrigramsMerged(refTri, kn3Lp, idCol)
+        // form: one (w0,w1,w2,lp_scaled) table. It is ONE materialization
+        // over the materialized trigram-type hub: the factor tables, B and
+        // the int64 headroom guard are computed inside that job, not kept
+        // or fetched apart. Per-batch scoring joins the arriving side
+        // against this single table — the model join chain runs at freeze
+        // time only, never per batch.
+        val kn3Lp = artifact(TextRanking.kn3LogProbs(refTri, hub = local))
+        // micro grid via round(), not a truncating cast
+        val ce = TextRanking.kn3ScoreTrigrams(refTri, kn3Lp, idCol)
           .select(round(col("cross_entropy") * 1e6, 0).cast("long")
             .as("ce_micro"), col(idCol))
-        // RANK-based cut, not limit-based: `limit(cutRank.toInt)` capped
-        // the reference at 2^31 docs. The two-phase distributed rank
-        // ([[graft.core.Ids.denseRankBy]], no single-partition window,
-        // 1-row collect) selects the (ce, id) pair at rank0 = cutRank - 1
-        // in the same deterministic total order for ANY reference size.
-        // n and the rank-select land in ONE action: n = max(rank0) + 1
-        // over the SAME ranked table, broadcast as a 1-row cross join;
-        // cutRank = 2n/3 == 0 (n <= 1) matches no row and falls back to
-        // Long.MinValue.
-        val ranked = graft.core.Ids
-          .denseRankBy(ce, Seq(col("ce_micro").asc, col(idCol).asc),
-            "rank0", pin = local)
-        val ceCut = ranked
-          .crossJoin(org.apache.spark.sql.functions.broadcast(
-            ranked.agg((max("rank0") + lit(1L)).as("__n"))))
-          .filter(col("rank0") ===
-            expr("(2L * __n) DIV 3L") - lit(1L)) // exact int64 division
-          .select("ce_micro").collect()
-          .headOption.map(_.getLong(0)).getOrElse(Long.MinValue)
-        (kn3Lp, ceCut)
+        (kn3Lp, frozenCut(ce, idCol))
       } }
       // every branch settles before a failure frees the artifacts and
       // rethrows the FIRST failure in branch order — the dsir branch
@@ -299,6 +278,29 @@ object CurationStream {
       // purpose, so the frozen footprint is the returned artifacts alone
       locals.forEach(df => CacheScope.free(df))
     }
+  }
+
+  /** The frozen perplexity cutoff over the reference cross-entropies `ce`
+    * (ce_micro, id; one row per id): the ce_micro of the LAST KEPT
+    * reference doc at the head+middle / tail boundary, rank 2n/3 - 1 in
+    * the deterministic (ce_micro, id) total order — `curateBatch` keeps
+    * ce <= cut, so boundary TIES are kept (boundary-inclusive). 2n/3 = 0
+    * (n <= 1) selects no doc and gives Long.MinValue.
+    *
+    * Exact for any reference size, with no rank column and no window: the
+    * table is globally sorted (range partitions, each sorted) and
+    * materialized, which measures each partition's row count; those
+    * counts locate the rank's partition and offset, and one job over that
+    * one partition reads the row ([[CacheScope.rowAt]]). The sorted table
+    * is freed before this returns. */
+  private[graft] def frozenCut(ce: DataFrame, idCol: String): Long = {
+    val sorted = CacheScope.materialize(
+      ce.orderBy(col("ce_micro").asc, col(idCol).asc), tracked = false)
+    try {
+      val cutRank = 2L * CacheScope.rowCount(sorted) / 3
+      if (cutRank == 0) Long.MinValue
+      else CacheScope.rowAt(sorted, cutRank - 1).get.getAs[Long]("ce_micro")
+    } finally CacheScope.free(sorted)
   }
 
   /** Curate ONE arriving batch under the frozen models. Stages (matching
@@ -387,7 +389,7 @@ object CurationStream {
       hashed.join(dupIds, Seq(idCol), "left_anti").drop("__h"))
     // frozen perplexity cut (docs with no in-model trigrams score nothing
     // and are dropped by the inner join — the conservative policy)
-    val ce = TextRanking.kn3ScoreTrigramsMerged(
+    val ce = TextRanking.kn3ScoreTrigrams(
         graft.operators.TextOps.ngrams(fresh, 3, idCol, textCol),
         m.kn3LogProbs, idCol)
       .select(col(idCol),
@@ -500,8 +502,7 @@ object CurationStream {
       Sketches.bloomBuildSharded(seenTable(spark, s, am), "h", am.seenShards,
           am.seenBloomBits, am.bloomHashes)
         .write.mode("overwrite").parquet(s.path(s"seen_bloom_v$next"))
-      writeMeta(spark, s, am.copy(seenBloomV = next), next)
-      s.publish(spark, next)
+      publish(spark, s, am.copy(seenBloomV = next), next)
     }
   }
 
@@ -616,14 +617,14 @@ object CurationStream {
             Sketches.bloomBuildSharded(newHashes, "h", am.seenShards,
               am.seenBloomBits, am.bloomHashes)))
           .write.mode("overwrite").parquet(s.path(s"seen_bloom_v$next"))
-        writeMeta(spark, s, am.copy(seenKeys = am.seenKeys + nNew,
-          seenBloomV = next, seenTableDeltas = am.seenTableDeltas + 1L), next)
-        s.publish(spark, next)
+        val published = am.copy(seenKeys = am.seenKeys + nNew,
+          seenBloomV = next, seenTableDeltas = am.seenTableDeltas + 1L)
+        publish(spark, s, published, next)
         // insertInto appends bucket-encoded files under the table's own
         // bucketing spec — the frozen side stays exchange-free
         newHashes.write.mode("append").insertInto(s.table(seenSub(am)))
-        if (compactEvery > 0 && am.seenTableDeltas + 1L >= compactEvery)
-          compactSeenTable0(spark, dir)
+        if (compactEvery > 0 && published.seenTableDeltas >= compactEvery)
+          compactSeenTable0(spark, s, published)
       }
     }
   }
@@ -645,14 +646,13 @@ object CurationStream {
     store(dir).locked(spark, "re-run the interrupted compaction (the old " +
         "table is still the published one until the pointer flips)",
         leaseMs) {
-      compactSeenTable0(spark, dir)
+      compactSeenTable0(spark, store(dir), readMeta(spark, dir))
     }
 
-  /** Compaction body — callers hold the delta lock. */
+  /** Compaction body over the live meta `am` — callers hold the delta
+    * lock. */
   private def compactSeenTable0(spark: org.apache.spark.sql.SparkSession,
-                                dir: String): Unit = {
-    val s = store(dir)
-    val am = readMeta(spark, dir)
+                                s: VersionedStore, am: ArtifactMeta): Unit = {
     seenTable(spark, s, am)
     val next = s.version(spark) + 1
     val sub = s"seen_hashes_v$next"
@@ -665,10 +665,9 @@ object CurationStream {
     // whole table, so the recount is parquet-footer-only over the fresh
     // files and seen_keys self-heals to exact every compactEvery deltas.
     val exactKeys = spark.table(s.table(sub)).count()
-    writeMeta(spark, s, am.copy(seenTableV = next, seenTableDeltas = 0L,
+    publish(spark, s, am.copy(seenTableV = next, seenTableDeltas = 0L,
       seenTableFiles = files, seenKeys = exactKeys), next)
-    s.publish(spark, next)
-    System.err.println(s"[compactSeenTable] $dir seen table compacted to " +
+    System.err.println(s"[compactSeenTable] ${s.dir} seen table compacted to " +
       s"version $next ($files files, ${am.confirmBuckets} buckets, " +
       s"$exactKeys keys recounted)")
   }
@@ -752,13 +751,13 @@ object CurationStream {
       .toDF(enc.schema.fieldNames.toIndexedSeq: _*).as(enc).head()
   }
 
-  /** Write the one-row meta to the version-`v` path (the caller publishes
-    * it afterwards — this never touches the LIVE meta, closing the
-    * torn-write window of an in-place overwrite: VERDICT r12 #1). */
-  private def writeMeta(spark: org.apache.spark.sql.SparkSession,
-                        s: VersionedStore, am: ArtifactMeta, v: Long): Unit = {
+  /** Publish version `v` under the meta `am`, written to the version-`v`
+    * path — never over the LIVE meta, closing the torn-write window of an
+    * in-place overwrite (VERDICT r12 #1). */
+  private def publish(spark: org.apache.spark.sql.SparkSession,
+                      s: VersionedStore, am: ArtifactMeta, v: Long): Unit = {
     import spark.implicits._
-    s.writeMeta(Seq(am).toDF(MetaCols: _*), v)
+    s.publish(spark, v, Seq(am).toDF(MetaCols: _*))
   }
 
   /** Drop every state generation except the CURRENT one
@@ -827,14 +826,13 @@ object CurationStream {
     s.writeTable(m.seenHashes, s"seen_hashes_v$next", "h", buckets)
     m.seenBloom.write.mode("overwrite").parquet(s.path(s"seen_bloom_v$next"))
     m.kn3LogProbs.write.mode("overwrite").parquet(s.path("kn3_logprobs"))
-    writeMeta(spark, s, ArtifactMeta(m.numBuckets, m.scoreMaxMicro,
+    publish(spark, s, ArtifactMeta(m.numBuckets, m.scoreMaxMicro,
       m.temperature, m.ceCutMicro, m.shingleN, m.evalBloomBits,
       m.seenBloomBits, m.bloomHashes, buckets, m.bitsPerKey,
       m.evalShards, m.seenShards, m.evalKeys, m.seenKeys,
       seenBloomV = next, seenTableV = next, seenTableDeltas = 0L,
       seenTableFiles = s.files(spark, s"seen_hashes_v$next"),
       keepGenerations = keepGenerations), next)
-    s.publish(spark, next)
   }
 
   /** Artifact-hygiene MANIFEST (VERDICT r14 #8): one queryable row of

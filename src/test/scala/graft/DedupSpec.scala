@@ -192,6 +192,42 @@ class DedupSpec extends AnyFunSuite {
     graft.core.CacheScope.release()
   }
 
+  test("duplicateClusters: both paths agree on int ids, null ids and the schema") {
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq).sortBy(r => String.valueOf(r.head)).toSeq
+    def bothPaths(pairs: org.apache.spark.sql.DataFrame) = {
+      val local = Dedup.duplicateClusters(pairs)
+      val distributed = Dedup.duplicateClusters(pairs, maxLocalEdges = 0)
+      assert(local.schema.map(f => (f.name, f.dataType)) ==
+        distributed.schema.map(f => (f.name, f.dataType)))
+      assert(rows(local) == rows(distributed))
+      rows(local)
+    }
+    val ints = Seq((1, 2), (2, 3), (7, 5)).toDF("id_a", "id_b")
+    assert(bothPaths(ints) == Seq(Seq(1, 1, 3L), Seq(2, 1, 3L),
+      Seq(3, 1, 3L), Seq(5, 5, 2L), Seq(7, 5, 2L)))
+    // a null id takes the distributed path: the label join hands the null
+    // node its neighbour's label and passes nothing on
+    val withNull = Seq[(Integer, Integer)]((1, 2), (4, null))
+      .toDF("id_a", "id_b")
+    assert(bothPaths(withNull) == Seq(Seq(1, 1, 2L), Seq(2, 1, 2L),
+      Seq(4, 4, 2L), Seq(null, 4, 2L)))
+    graft.core.CacheScope.release()
+  }
+
+  test("duplicateClusters: the distributed path throws past maxIter") {
+    // a 6-node chain needs more than one propagation round; with
+    // maxIter = 1 the distributed path must fail loudly, not return a
+    // split component
+    val chain = (1L to 5L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val e = intercept[IllegalStateException](
+      Dedup.duplicateClusters(chain, maxIter = 1, maxLocalEdges = 0))
+    assert(e.getMessage.contains("did not converge in 1 rounds"))
+    // the driver path needs no rounds
+    assert(Dedup.duplicateClusters(chain, maxIter = 1).count() == 6L)
+    graft.core.CacheScope.release()
+  }
+
   test("duplicateClusters: empty pair table yields empty clusters") {
     val empty = Seq.empty[(Long, Long)].toDF("id_a", "id_b")
     assert(Dedup.duplicateClusters(empty).count() == 0L)

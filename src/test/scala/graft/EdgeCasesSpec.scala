@@ -309,11 +309,10 @@ class EdgeCasesSpec extends AnyFunSuite {
     // model: scoring anything under it returns no rows (out-of-support)
     val emptyTri = graft.operators.TextOps.ngrams(
       empty.select("doc_id", "text"), 3)
-    val m = TextRanking.kn3ModelFromTrigrams(
-      TextRanking.kn3Statistics(emptyTri))
+    val lp = TextRanking.kn3LogProbs(TextRanking.kn3Statistics(emptyTri))
     val someTri = graft.operators.TextOps.ngrams(
       Seq((1L, "a b c d")).toDF("doc_id", "text"), 3)
-    assert(TextRanking.kn3ScoreTrigrams(someTri, m).count() == 0)
+    assert(TextRanking.kn3ScoreTrigrams(someTri, lp).count() == 0)
     graft.core.CacheScope.release()
   }
 

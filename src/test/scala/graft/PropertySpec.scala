@@ -138,7 +138,9 @@ object Round3Props extends Properties("Winnow/Pack") {
 }
 
 /** duplicateClusters checked against a brute-force union-find on small
-  * random graphs (bounded cases: each case runs the iterative Spark job). */
+  * random graphs, through both sides of its edge budget: the driver-local
+  * union-find and the distributed label propagation (budget 0). Bounded
+  * cases: each case runs the iterative Spark job. */
 object ClusterProps extends Properties("Dedup.duplicateClusters") {
 
   override def overrideParameters(p: org.scalacheck.Test.Parameters)
@@ -169,15 +171,18 @@ object ClusterProps extends Properties("Dedup.duplicateClusters") {
     import spark.implicits._
     forAll(edgesGen) { edges =>
       val expected = bruteComponents(edges)
-      val got =
+      def got(maxLocalEdges: Long) =
         if (edges.isEmpty) Map.empty[Long, (Long, Long)]
         else graft.operators.Dedup
-          .duplicateClusters(edges.toDF("id_a", "id_b")).collect()
+          .duplicateClusters(edges.toDF("id_a", "id_b"),
+            maxLocalEdges = maxLocalEdges).collect()
           .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+      val (local, distributed) = (got(1L << 20), got(0L))
       graft.core.CacheScope.release()
       val sizes = expected.groupBy(_._2).map { case (c, m) => c -> m.size.toLong }
       val want = expected.map { case (id, c) => id -> (c, sizes(c)) }
-      Prop(got == want) :| s"edges=$edges got=$got want=$want"
+      Prop(local == want && distributed == want) :|
+        s"edges=$edges local=$local distributed=$distributed want=$want"
     }
   }
 }

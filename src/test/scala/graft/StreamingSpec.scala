@@ -1056,8 +1056,7 @@ class StreamingSpec extends AnyFunSuite {
       seen,
       Sketches.bloomBuildSharded(seen, "h", m.seenShards, m.seenBloomBits,
         m.bloomHashes),
-      TextRanking.kn3LogProbs(
-        TextRanking.kn3ModelFromTrigrams(TextOps.ngrams(cleaned, 3))))
+      TextRanking.kn3LogProbs(TextOps.ngrams(cleaned, 3)))
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
     frozen.zip(expected).foreach { case ((name, got), want) =>
@@ -1071,6 +1070,43 @@ class StreamingSpec extends AnyFunSuite {
     val leaked = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
     assert(leaked.isEmpty, s"freeze + release left cached RDDs $leaked")
     assert(CacheScope.trackedCount == 0)
+  }
+
+  test("frozenCut selects rank 2n/3 - 1 exactly like the rank-based cut, " +
+       "on ties and for small n") {
+    import graft.core.{CacheScope, Ids}
+    import graft.streaming.CurationStream
+    import spark.implicits._
+    // the cut the freeze selected before: a dense (ce, id) rank and the
+    // row at rank 2n/3 - 1, n = max rank + 1
+    def rankCut(ce: org.apache.spark.sql.DataFrame): Long = {
+      val ranked = Ids.denseRankBy(ce,
+        Seq(col("ce_micro").asc, col("doc_id").asc), "rank0")
+      ranked.crossJoin(broadcast(
+          ranked.agg((max("rank0") + lit(1L)).as("__n"))))
+        .filter(col("rank0") === expr("(2L * __n) DIV 3L") - lit(1L))
+        .select("ce_micro").collect()
+        .headOption.map(_.getLong(0)).getOrElse(Long.MinValue)
+    }
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    // ids interleave so (ce, id) order differs from id order; ce ties
+    // straddle the cut
+    val tied = Seq(5L, 5L, 5L, 1L, 9L, 5L, 5L, 2L, 5L, 9L, 5L, 3L, 5L)
+    val cases = Seq(0, 1, 2, 3, 7).map(n =>
+      s"n=$n" -> (0 until n).map(i => ((i * 37 + 11) % 101).toLong -> i.toLong)) :+
+      ("ties" -> tied.zipWithIndex.map { case (c, i) => c -> (100L - i) })
+    for ((name, rows) <- cases) {
+      val ce = rows.toDF("ce_micro", "doc_id").repartition(3)
+      val want = rankCut(ce)
+      val sorted = rows.sorted
+      val cutRank = 2 * rows.size / 3
+      assert(want == (if (cutRank == 0) Long.MinValue else sorted(cutRank - 1)._1),
+        name)
+      assert(CurationStream.frozenCut(ce, "doc_id") == want, name)
+    }
+    CacheScope.release()
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
+    assert(leaked.isEmpty, s"frozenCut left cached RDDs $leaked")
   }
 
   test("stateful near-dup stream == batch MinHash-LSH pairs across batches") {

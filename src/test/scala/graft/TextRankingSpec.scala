@@ -150,13 +150,53 @@ class TextRankingSpec extends AnyFunSuite {
     // statistics per parity shard, merged by union; model re-aggregates
     val merged = TextRanking.kn3Statistics(tri.filter(col("doc_id") % 2 === 0))
       .unionByName(TextRanking.kn3Statistics(tri.filter(col("doc_id") % 2 === 1)))
-    val inc = TextRanking.kn3ScoreTrigrams(tri,
-        TextRanking.kn3ModelFromTrigrams(merged))
+    val inc = TextRanking.kn3ScoreTrigrams(tri, TextRanking.kn3LogProbs(merged))
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
     val mono = TextRanking.trigramKneserNeyCrossEntropy(d)
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
     assert(inc == mono) // exact ==, no tolerance: counts are additive
     assert(inc.nonEmpty)
+    graft.core.CacheScope.release()
+  }
+
+  test("kn3 int64 headroom guard: exact bound, raised by the lazy and the " +
+       "materialized model") {
+    // one trigram of count c: s01 = c, nmid = 1, B = 1, so the guard
+    // 40·s01·nmid·B <= Long.MaxValue holds exactly up to c = M / 40
+    def tri(rows: (String, String, String, Long)*) =
+      rows.map { case (a, b, c, n) => (1L, a, b, c, n) }
+        .toDF("doc_id", "w0", "w1", "w2", "count")
+    val edge = Long.MaxValue / 40
+    val ok = tri(("a", "b", "c", edge))
+    assert(TextRanking.kn3LogProbs(ok).collect().map(_.getLong(3)).toSeq ==
+      Seq(0L)) // p = 1: the trigram is the model's only continuation
+    def raised(f: => Any): String = {
+      val e = intercept[Exception](f)
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(t => String.valueOf(t.getMessage)).mkString(" | ")
+    }
+    assert(raised(TextRanking.kn3LogProbs(tri(("a", "b", "c", edge + 1)))
+      .collect()).contains("trigram-KN int64 headroom exceeded (max s01=" +
+        s"${edge + 1}, max nmid=1, B=1)"))
+    // counts near 1e17: s01 = 2e17, nmid = 2, B = 2, so 40·s01·nmid·B =
+    // 3.2e19 > Long.MaxValue, and the unguarded den 16·s01·nmid·B wraps
+    val big = tri(("a", "b", "c", 100000000000000000L),
+      ("a", "b", "d", 100000000000000000L))
+    val msg = "trigram-KN int64 headroom exceeded (max s01=200000000000000000, " +
+      "max nmid=2, B=2)"
+    // the registry shape: one lazy plan, scored
+    assert(raised(TextRanking.kn3ScoreTrigrams(big, TextRanking.kn3LogProbs(big))
+      .collect()).contains(msg))
+    // the freeze shape: a materialized hub, then one materialization
+    val kept = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.DataFrame]
+    def hub(df: org.apache.spark.sql.DataFrame) = {
+      val m = graft.core.CacheScope.materialize(df, tracked = false)
+      kept += m
+      m
+    }
+    assert(raised(graft.core.CacheScope.materialize(
+      TextRanking.kn3LogProbs(big, hub = hub))).contains(msg))
+    kept.foreach(graft.core.CacheScope.free)
     graft.core.CacheScope.release()
   }
 
